@@ -4,14 +4,22 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 
 The geo_pipeline entry is the engine's north-star workload: Luxembourg AOI at
 1000 m -> 2774 tiles -> synthetic chips -> zonal label proportions -> foreign
-argmax join, i.e. tiles + join rows end-to-end.  The remaining entries cover
-the relational, dedup, similarity and event operators at sf scale.
+argmax join, i.e. tiles + join rows end-to-end.  Without the reference's
+Luxembourg outline it runs on the committed stand-in
+``tests/data/aoi_fixture.wkt`` (232 tiles), which is not comparable with
+runs on Luxembourg; the JSON line's ``aoi`` records which one ran and its
+tile count.  The remaining entries cover the relational, dedup, similarity
+and event operators at sf scale.
+
+``sf`` is the number in the data directory's name (``sf0.1`` -> 0.1), else
+null; ``sf_dir`` is recorded too.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -27,13 +35,30 @@ from geetiles_spark.operators import joins, random_parts, zonal  # noqa: E402
 from geetiles_spark.session import get_spark  # noqa: E402
 
 LUX_WKT = "/root/reference/data/luxembourg.wkt"
+FIXTURE_WKT = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "tests", "data", "aoi_fixture.wkt"
+)
 
 
-def geo_pipeline(spark, chip_size=1000):
+def bench_aoi() -> tuple[str, str]:
+    """(name, path) of the geo_pipeline AOI: Luxembourg when installed,
+    else the committed stand-in."""
+    if os.path.isfile(LUX_WKT):
+        return "luxembourg", LUX_WKT
+    return "aoi_fixture", FIXTURE_WKT
+
+
+def scale_factor(sf_dir: str) -> float | None:
+    """The number in an ``sf<N>`` directory name, else None."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(os.path.normpath(sf_dir)))
+    return float(m.group(1)) if m else None
+
+
+def geo_pipeline(spark, aoi, chip_size=1000):
+    """Rows out (tiles + props + join rows) and the tile count."""
     from pyspark.sql import functions as F
     from pyspark.sql.observation import Observation
 
-    aoi = wkt.load_ring(LUX_WKT)
     tiles = gridop.make_grid(spark, aoi, chip_size).cache()
     n_tiles = tiles.count()
     # fused chip-acquisition + zonal stats: the payload never crosses the
@@ -52,7 +77,7 @@ def geo_pipeline(spark, chip_size=1000):
         j1_o.select(F.lit(1).alias("k"))
     ).count()
     tiles.unpersist()
-    return n_tiles + int(obs_p.get["n"]) + int(obs_j.get["n"])
+    return n_tiles + int(obs_p.get["n"]) + int(obs_j.get["n"]), n_tiles
 
 
 BENCH_QUERIES = [
@@ -127,6 +152,8 @@ def main():
     qs = {**E.extra_queries(), **E.queries()}
     timings: dict[str, float] = {}
     rows_total = 0
+    aoi_name, aoi_path = bench_aoi()
+    aoi = wkt.load_ring(aoi_path)
 
     warm = warmup(spark, sf_dir)
     s0 = _cpu_stat()
@@ -139,7 +166,7 @@ def main():
     for _pass in range(2):
         t0 = time.time()
         with cache.persist_scope():
-            n = geo_pipeline(spark)
+            n, aoi_tiles = geo_pipeline(spark, aoi)
         dt = round(time.time() - t0, 3)
         if _pass == 0:
             rows_total += n
@@ -159,7 +186,6 @@ def main():
                 timings[name] = min(timings[name], dt)
 
     total = round(sum(timings.values()), 3)
-    sf = 0.1 if "sf0.1" in sf_dir else (0.01 if "sf0.01" in sf_dir else 0.001)
     # hypervisor steal over the measured window (multi-minute bursts observed
     # on this sandbox — identical suites have measured 42s vs 80s wall); a
     # high value means the weather, not the plans, set the numbers
@@ -173,7 +199,9 @@ def main():
                 "unit": "sec",
                 "queries": timings,
                 "warmup_sec": warm,
-                "sf": sf,
+                "sf": scale_factor(sf_dir),
+                "sf_dir": sf_dir,
+                "aoi": {"name": aoi_name, "tiles": aoi_tiles},
                 "rows_out": rows_total,
                 "steal_pct": steal_pct,
             }

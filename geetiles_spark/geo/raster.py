@@ -55,7 +55,7 @@ def get_binary_mask(ring: np.ndarray, raster_shape: tuple[int, ...]) -> np.ndarr
     rng = cmax - cmin
     # fast path: box geometry == its envelope -> full mask (utils.py:229 burns
     # every pixel because the scaled ring covers the whole canvas)
-    if _ring_is_box(ring):
+    if ring_is_box(ring):
         return np.ones(raster_shape, dtype=np.uint8)
     rng = np.where(rng == 0, 1.0, rng)
     norm = (ring - cmin) / rng
@@ -64,10 +64,17 @@ def get_binary_mask(ring: np.ndarray, raster_shape: tuple[int, ...]) -> np.ndarr
     return rasterize_rings([scaled], raster_shape)
 
 
-def _ring_is_box(ring: np.ndarray) -> bool:
-    pts = np.unique(ring[:-1], axis=0)
+def ring_is_box(ring: np.ndarray) -> bool:
+    """Whether a ring's vertices (open or closed ring) are the corners of an
+    axis-aligned box: 4 distinct points, 2 distinct x, 2 distinct y.
+
+    Counted with Python sets (a few us a ring, against ~75 us for
+    ``np.unique``), with ``np.unique``'s equality: ``-0.0 == 0.0``, a point
+    with a NaN coordinate is distinct from every other point, and NaN x (or
+    y) values count once."""
+    pts = set(map(tuple, np.asarray(ring, dtype=np.float64).tolist()))
     if len(pts) != 4:
         return False
-    xs = np.unique(pts[:, 0])
-    ys = np.unique(pts[:, 1])
+    xs = {x if x == x else None for x, _ in pts}
+    ys = {y if y == y else None for _, y in pts}
     return len(xs) == 2 and len(ys) == 2

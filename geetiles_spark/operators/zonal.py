@@ -17,7 +17,7 @@ GeoJSON rewrite (``partitions.py:270-272``).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,14 +40,15 @@ PROPS_SCHEMA = T.StructType(
 def proportions_kernel(
     arr: np.ndarray, ddef, geometry_ring: np.ndarray | None
 ) -> dict[str, float]:
-    """Single-chip zonal-stats kernel (reference loop body, vectorized).
+    """Single-chip zonal-stats kernel (reference loop body, per pixel).
 
-    Two result-identical fast paths (kernel profiled at 2.08 ms/chip ->
-    0.8 ms at 320x320): the masked-copy is skipped when the rasterized
-    geometry covers every pixel (box tiles — the overwhelmingly common
-    case), and the histogram uses ``bincount`` instead of the sort-based
-    ``unique`` for small non-negative integer dtypes (same values, same
-    ascending key order)."""
+    The fallback of :func:`proportions_batch` for chips it has no value
+    table for: dtypes other than uint8/uint16, or a ``map_values`` that does
+    not return integers or changes the shape.  The histogram uses
+    ``bincount`` instead of the sort-based ``unique`` for small non-negative
+    integer dtypes (same values, same ascending key order).  Measured on a
+    4-vCPU Xeon VM, 100x100 uint8 ESA chips on box tiles: ~250 us a chip,
+    about 4x the batched path in the same run."""
     img = ddef.map_values(arr)
     if geometry_ring is not None:
         mask = raster.get_binary_mask(geometry_ring, img.shape)
@@ -67,6 +68,73 @@ def proportions_kernel(
     vals, counts = np.unique(flat, return_counts=True)
     total = counts.sum()
     return {str(k): float(v) / float(total) for k, v in zip(vals.tolist(), counts.tolist())}
+
+
+def _value_table(ddef, dtype: np.dtype):
+    """``ddef.map_values`` over every value of one raw dtype, as the code of
+    its mapped value for each raw value plus the string keys of the distinct
+    mapped values (ascending).  Exact because ``map_values`` is elementwise
+    (``datasets.register``); ``None`` (the per-pixel path) when the map does
+    not return integers or changes the shape of its input."""
+    raw = np.arange(1 << (8 * dtype.itemsize), dtype=dtype)
+    mapped = np.asarray(ddef.map_values(raw))
+    if mapped.shape != raw.shape or mapped.dtype.kind not in "iu":
+        return None
+    values, codes = np.unique(mapped, return_inverse=True)
+    return codes, [str(int(v)) for v in values]
+
+
+def _table_props(pixels: np.ndarray, codes: np.ndarray, keys: list[str]) -> dict[str, float]:
+    raw = np.bincount(pixels.ravel())
+    counts = np.bincount(codes[: len(raw)], weights=raw, minlength=len(keys))
+    total = float(pixels.size)
+    nz = np.flatnonzero(counts)
+    return {keys[k]: c / total for k, c in zip(nz.tolist(), counts[nz].tolist())}
+
+
+def proportions_batch(chips: Iterable, rings: list[np.ndarray], ddef) -> list:
+    """Label proportions of one Arrow batch: ``chips[i]`` over ``rings[i]``,
+    the same dicts as :func:`proportions_kernel`, bit for bit.
+
+    ``chips`` may be a generator, so a batch never holds more than one chip;
+    a ``None`` chip (no data) gives ``None``.  Box rings take the whole
+    chip (their mask is all ones); other rings mask with
+    ``raster.get_binary_mask``.  A uint8/uint16 chip is histogrammed raw
+    with one ``bincount`` and the histogram is mapped through a value table
+    built once per batch and dtype; ``count / total`` is the float division
+    of the per-pixel path.  Other chips take :func:`proportions_kernel`.
+    Measured on a 4-vCPU Xeon VM, 100x100 uint8 ESA chips on box tiles:
+    ~60 us a chip, WKB ring decoding included (synthesizing one takes about
+    as long)."""
+    tables: dict = {}
+    out = []
+    for arr, ring in zip(chips, rings):
+        if arr is None:
+            out.append(None)
+            continue
+        if arr.dtype in (np.uint8, np.uint16) and arr.dtype not in tables:
+            tables[arr.dtype] = _value_table(ddef, arr.dtype)
+        table = tables.get(arr.dtype)
+        if table is None:
+            out.append(proportions_kernel(arr, ddef, ring))
+            continue
+        if raster.ring_is_box(ring):  # the mask is all ones
+            pixels = arr
+        else:
+            pixels = arr[raster.get_binary_mask(ring, arr.shape) == 1]
+        out.append(_table_props(pixels, *table))
+    return out
+
+
+def _resolve(dataset_name):
+    return (
+        get_dataset_definition(dataset_name)
+        if isinstance(dataset_name, str) else dataset_name
+    )
+
+
+def _rings(wkbs) -> list[np.ndarray]:
+    return [geom.wkb_to_polygon(bytes(w)) for w in wkbs]
 
 
 def compute_proportions(
@@ -98,27 +166,18 @@ def compute_proportions(
             on="tile_id",
             how="inner",
         )
-
-    ddef = (
-        get_dataset_definition(dataset_name)
-        if isinstance(dataset_name, str) else dataset_name
-    )
+    ddef = _resolve(dataset_name)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_ids = []
-            out_props = []
-            for tile_id, wkb, payload, dtype, h, w, bands in zip(
-                pdf["tile_id"], pdf["geometry_wkb"], pdf["payload"],
-                pdf["dtype"], pdf["height"], pdf["width"], pdf["bands"],
-            ):
-                arr = decode_payload(payload, dtype, int(h), int(w), int(bands))
-                ring = geom.wkb_to_polygon(bytes(wkb))
-                # fast path: box tiles mask to all-ones (raster.get_binary_mask
-                # detects this); pass None to skip entirely
-                out_ids.append(tile_id)
-                out_props.append(proportions_kernel(arr, ddef, ring))
-            yield pd.DataFrame({"tile_id": out_ids, "props": out_props})
+            chips_it = (
+                decode_payload(payload, dtype, int(h), int(w), int(bands))
+                for payload, dtype, h, w, bands in zip(
+                    pdf["payload"], pdf["dtype"], pdf["height"], pdf["width"], pdf["bands"]
+                )
+            )
+            props = proportions_batch(chips_it, _rings(pdf["geometry_wkb"]), ddef)
+            yield pd.DataFrame({"tile_id": pdf["tile_id"], "props": props})
 
     return joined.mapInPandas(run, PROPS_SCHEMA)
 
@@ -140,29 +199,29 @@ def compute_proportions_fused(
     isn't being persisted; when chips ARE persisted, write them from this
     same pass (fetch+stats+write in one stage) rather than re-reading.
     """
-    from ..sources.datasets import get_dataset_definition
+    ddef = _resolve(dataset_name)
+    zero_sum_is_nodata = getattr(ddef, "zero_sum_is_nodata", False)
 
-    ddef = (
-        get_dataset_definition(dataset_name)
-        if isinstance(dataset_name, str) else dataset_name
-    )
+    def chip(tile_id):
+        arr = ddef.synth_chip(tile_id, height, width)
+        if arr is None:
+            return None
+        arr = ddef.post_process_chip(arr)
+        if zero_sum_is_nodata and arr.sum() == 0:
+            return None
+        return arr
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_ids, out_props = [], []
-            for tile_id, wkb in zip(pdf["tile_id"], pdf["geometry_wkb"]):
-                arr = ddef.synth_chip(tile_id, height, width)
-                if arr is None:
-                    continue
-                arr = ddef.post_process_chip(arr)
-                if getattr(ddef, "zero_sum_is_nodata", False) and arr.sum() == 0:
-                    continue
-                ring = geom.wkb_to_polygon(bytes(wkb))
-                out_ids.append(tile_id)
-                out_props.append(proportions_kernel(arr, ddef, ring))
-            if out_ids:  # an empty frame's props column would lose its
-                yield pd.DataFrame({"tile_id": out_ids, "props": out_props})
-                # map dtype and break the Arrow conversion
+            ids = pdf["tile_id"]
+            props = proportions_batch(map(chip, ids), _rings(pdf["geometry_wkb"]), ddef)
+            keep = [i for i, p in enumerate(props) if p is not None]
+            # an empty frame's props column would lose its map dtype and
+            # break the Arrow conversion
+            if keep:
+                yield pd.DataFrame(
+                    {"tile_id": ids.iloc[keep].to_numpy(), "props": [props[i] for i in keep]}
+                )
 
     return tiles.select("tile_id", "geometry_wkb").mapInPandas(run, PROPS_SCHEMA)
 

@@ -21,10 +21,16 @@ from ..geo import maps
 
 ESA_CODES = [0, 10, 20, 30, 40, 50, 60, 70, 80, 90, 95, 100]
 ESA_VALUE_MAP = {0: 0, 10: 1, 20: 2, 30: 3, 40: 4, 50: 5, 60: 6, 70: 7, 80: 8, 90: 9, 95: 10, 100: 11}
+_ESA_CODES_U8 = np.asarray(ESA_CODES, dtype=np.uint8)
 
 
 def chip_seed(tile_id: str, dataset: str) -> int:
     return int(hashlib.sha256(f"{dataset}/{tile_id}".encode()).hexdigest()[:16], 16)
+
+
+def _upsample(coarse: np.ndarray, block: int) -> np.ndarray:
+    """Each coarse cell as a block x block patch (``np.kron`` with ones)."""
+    return np.repeat(np.repeat(coarse, block, axis=0), block, axis=1)
 
 
 class DatasetDef:
@@ -42,6 +48,8 @@ class DatasetDef:
         return self.dtype
 
     def map_values(self, array: np.ndarray) -> np.ndarray:
+        """Pixel value map; must be elementwise (each output pixel depends on
+        that input pixel only): zonal stats map a per-dtype value table."""
         return array
 
     def build(self) -> None:
@@ -79,12 +87,11 @@ class EsaWorldCoverDef(DatasetDef):
             return None
         # spatially-correlated class patches: coarse grid upsampled
         block = 10
-        coarse = rng.choice(
-            np.asarray(ESA_CODES, dtype=np.uint8),
-            size=(height // block + 1, width // block + 1),
-        )
-        chip = np.kron(coarse, np.ones((block, block), dtype=np.uint8))
-        return chip[:height, :width]
+        # the draws of rng.choice(codes, size), without its per-call overhead
+        coarse = _ESA_CODES_U8[
+            rng.integers(0, len(ESA_CODES), size=(height // block + 1, width // block + 1))
+        ]
+        return _upsample(coarse, block)[:height, :width]
 
 
 class Sentinel2RgbDef(DatasetDef):
@@ -114,8 +121,7 @@ class TreeCoverDef(DatasetDef):
         rng = np.random.default_rng(chip_seed(tile_id, self.name))
         block = 20
         coarse = rng.integers(0, 101, size=(height // block + 1, width // block + 1))
-        chip = np.kron(coarse, np.ones((block, block), dtype=np.int64))
-        return chip[:height, :width].astype(np.uint8)
+        return _upsample(coarse, block)[:height, :width].astype(np.uint8)
 
 
 class HumanPopDef(DatasetDef):
@@ -363,5 +369,9 @@ def get_dataset_definition(name: str) -> DatasetDef:
 
 
 def register(cls: type[DatasetDef]) -> type[DatasetDef]:
+    """Register a dataset def by its ``name``.  Its ``map_values`` must be
+    elementwise (each output pixel depends on that input pixel only): zonal
+    stats apply it to a table of every raw uint8/uint16 value, not to the
+    chip."""
     _REGISTRY[cls.name] = cls
     return cls

@@ -3,6 +3,8 @@ import pytest
 
 from geetiles_spark.geo import geom
 
+from . import AOI_FIXTURE_WKT
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -25,6 +27,14 @@ def aoi_lux():
     from geetiles_spark.geo import wkt
 
     return wkt.load_ring("/root/reference/data/luxembourg.wkt")
+
+
+@pytest.fixture(scope="session")
+def aoi_fixture():
+    """FIXTURES.md §2 aoi_fixture: the committed 128-vertex concave AOI."""
+    from geetiles_spark.geo import wkt
+
+    return wkt.load_ring(AOI_FIXTURE_WKT)
 
 
 @pytest.fixture(scope="session")

@@ -14,6 +14,8 @@ import pytest
 
 from geetiles_spark.geo import cells, geom, hashing, maps, raster, utm, wkt
 
+from . import AOI_FIXTURE_WKT
+
 
 # ------------------------------------------------------------------ UTM ----
 
@@ -338,6 +340,27 @@ class TestRaster:
         assert mask[7, 7] == 1  # bottom-right inside (wide arm)
         assert mask[1, 6] == 0
 
+    @pytest.mark.parametrize(
+        "pts, want",
+        [
+            ([[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]], True),
+            ([[0, 0], [1, 0], [1, 1], [0, 1]], True),  # open ring
+            ([[0, 0], [1, 1], [1, 0], [0, 1], [0, 0]], True),  # bowtie order
+            ([[0, 0], [1, 0], [1, 0], [1, 1], [0, 1], [0, 0]], True),
+            ([[-0.0, 0], [1, 0], [1, 1], [0, 1], [0, 0]], True),  # -0.0 == 0.0
+            ([[0, 0], [1, 0], [0, 1], [0, 0]], False),  # triangle
+            ([[1, 0], [2, 1], [1, 2], [0, 1], [1, 0]], False),  # diamond
+            ([[0, 0], [1, 0], [2, 0], [0, 0]], False),  # collinear
+            ([[0, 0], [1, 0], [1, 1], [0, 1], [0.5, 1], [0, 0]], False),
+            # np.unique equality: NaN x values count once, and two NaN
+            # points are distinct even with equal coordinates
+            ([[np.nan, 0], [np.nan, 1], [1, 0], [1, 1]], True),
+            ([[np.nan, 0], [np.nan, 0], [1, 0], [1, 1]], True),
+        ],
+    )
+    def test_ring_is_box(self, pts, want):
+        assert raster.ring_is_box(np.array(pts, dtype=float)) is want
+
     def test_mask_fraction_triangle(self):
         ring = np.array([[0, 0], [1, 0], [0, 1], [0, 0]], dtype=float)
         mask = raster.get_binary_mask(ring, (100, 100))
@@ -388,7 +411,8 @@ class TestCells:
 
 class TestWkt:
     def test_luxembourg_parses(self):
-        ring = wkt.load_ring("/root/reference/data/luxembourg.wkt")
+        # the committed stand-in: 128 vertices inside Luxembourg's bounds
+        ring = wkt.load_ring(AOI_FIXTURE_WKT)
         assert ring.shape[1] == 2
         assert len(ring) > 100
         minx, miny, maxx, maxy = geom.ring_bounds(ring)

@@ -18,6 +18,8 @@ from geetiles_spark.operators import joins
 from geetiles_spark.sources import aoi_catalog, chips as chipsrc
 from geetiles_spark.sources.datasets import get_dataset_definition
 
+from . import AOI_FIXTURE_WKT
+
 
 class TestIntervalSpatialJoin:
     def test_flood_style_join(self, spark, tiles_box):
@@ -173,7 +175,7 @@ class TestAoiCatalog:
         assert oceania is not None and len(oceania) == 2
         assert aoi_catalog.get_aoi(cat, "Narnia") is None
         # file path short-circuit
-        rings = aoi_catalog.get_aoi(cat, "/root/reference/data/luxembourg.wkt")
+        rings = aoi_catalog.get_aoi(cat, AOI_FIXTURE_WKT)
         assert rings is not None and len(rings[0]) > 100
 
 

@@ -86,3 +86,21 @@ class TestPlanShapes:
             plan = _plan(spark, name)
             assert "LeftAnti" not in plan, f"{name} kept the hot-split anti join"
             assert "LeftSemi" not in plan, f"{name} kept the hot-split semi join"
+
+    def test_fused_zonal_is_one_join_free_python_stage(self, spark, aoi_box):
+        """compute_proportions_fused synthesizes and histograms each chip in
+        the Python worker that reads the tile: one MapInPandas, no shuffle."""
+        import re
+
+        from geetiles_spark.geo import geom
+        from geetiles_spark.operators import zonal
+
+        tiles = spark.createDataFrame(
+            [("t0", bytearray(geom.polygon_to_wkb(aoi_box)))], "tile_id string, geometry_wkb binary"
+        )
+        plan = (
+            zonal.compute_proportions_fused(tiles, "esaworldcover-2020")
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+        assert "Exchange" not in plan, plan

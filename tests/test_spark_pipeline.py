@@ -32,11 +32,22 @@ class TestGrid:
         np.testing.assert_allclose(got["area_km2"], exp["area_km2"], rtol=1e-12)
         assert len(got) == 24  # FIXTURES.md: aoi_box @ 500m ≈ 24 tiles
 
-    def test_luxembourg_golden_hash(self, spark, aoi_lux):
+    def test_luxembourg_golden_hash(self, spark, request):
         """The README walkthrough golden: lux @ 1000m dataset hash
         14c55eb7d417f (/root/reference/README.md:25)."""
+        try:
+            aoi_lux = request.getfixturevalue("aoi_lux")
+        except FileNotFoundError as e:
+            pytest.skip(f"the reference Luxembourg outline is not installed: {e.filename}")
         tiles = grid.make_grid(spark, aoi_lux, 1000, num_partitions=16)
         assert grid.dataset_hash(tiles) == "14c55eb7d417f"
+
+    def test_fixture_golden_hash(self, spark, aoi_fixture):
+        """The committed AOI fixture @ 1000m: 232 tiles and a frozen dataset
+        hash (FIXTURES.md §2), the golden that runs without the reference."""
+        tiles = grid.make_grid(spark, aoi_fixture, 1000, num_partitions=16)
+        assert tiles.count() == 232
+        assert grid.dataset_hash(tiles) == "30a1698a7d6f8"
 
     def test_tile_sides_constant_lonlat(self, tiles_box):
         # GEE degree-alignment requirement: tiles are lon/lat boxes
