@@ -16,19 +16,29 @@ Operators:
 - embedding near-duplicates -> cosine pairs above a threshold (see
                                similarity.py for the LSH-bucketed scale path)
 
-Scale notes: the shingle self-join shuffles on the shingle value; frequent
-shingles create skew — AQE skew-join splitting handles moderate skew, and a
-``distinct`` on (doc, shingle) pre-bounds the blow-up.  Band buckets shuffle
-on (band, signature), which is uniform by construction.
+Scale notes: every pair operator is a keyed self-join (gram, band key or
+signature segment), and a key shared by D rows emits ~D^2/2 pairs inside
+one join task.  AQE's skew-join splitting does not bound that: it fires on
+partition BYTES (256 MB by default), while a key of a few thousand rows
+is small in bytes and quadratic in pairs.  :func:`_keyed_self_join` owns
+the fix once for all four pair operators — an exact probe of the per-key
+row counts and a salted join for the keys above ``HOT_KEY_THRESHOLD``.
+Per-doc dedup (``array_distinct`` before the explode) keeps a doc's
+repeated grams from multiplying its rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from .. import cache
 from .partitioning import spread
+
+# keys shared by more rows than this take the salted self-join, spread over
+# N_SALTS tasks (sizing rule on :func:`_keyed_self_join`)
+HOT_KEY_THRESHOLD = 1024
+N_SALTS = 16
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -134,6 +144,59 @@ def minhash_signatures(
     )
 
 
+def _keyed_self_join(
+    rows: DataFrame, keys: list[str], id_col: str, hot_threshold: int, n_salts: int, pair
+) -> tuple[DataFrame, Row]:
+    """The skew-safe keyed self-join every pair operator runs: ``(pairs,
+    est)`` where ``pairs = pair(a_rows, b_rows, join_keys)`` over all of
+    ``rows`` and ``est`` is the probe row ``(s2, max_df)``.
+
+    ``pair`` projects the two sides, joins them on ``join_keys`` and runs
+    every filter that must stay inside the join granule (report-once,
+    length filter, packed key).  ``join_keys`` is ``keys`` on the plain
+    path and ``keys + ["salt"]`` on the salted one; ``salt`` is dropped
+    from its output.  ``rows`` is read by the probe and by the join, so the
+    caller persists it.
+
+    Probe: the per-key row counts ``df`` are persisted and ONE action reads
+    ``sum(df^2)`` and ``max(df)``.  ``s2`` is the exact ordered join-row
+    count (the quantity *Random Sampling Over Spatial Range Joins*, ICDE
+    2025, samples), so a caller can size its pair aggregation from it.
+
+    Pay-as-you-go: when no key holds more than ``hot_threshold`` rows (the
+    clean-corpus case) the plan is the plain equi-join, with no anti, semi
+    or salt stages.  Otherwise the hot keys — few by definition, so
+    broadcast — split the rows: cold keys take the plain join, hot keys a
+    SALTED join on ``keys + [salt]`` where side a carries ``salt =
+    xxhash64(id) % n_salts`` and side b is replicated to every salt.  Each
+    ``(key, a, b)`` still meets exactly once (a's salt is a function of its
+    id), so the pairs are identical to the plain join's, while a key of D
+    rows emits ~D^2/n_salts pairs per task instead of ~D^2/2 in one.
+
+    Sizing on skewed corpora (measured, BENCH/LLM_SCALING.md): a cold key
+    just under ``hot_threshold`` emits ~df^2/2 pairs in one join granule,
+    a salted hot key ~df^2/n_salts per granule — so bound the per-task pair
+    emission with ``hot_threshold ~ sqrt(2 x target_pairs_per_task)`` and
+    ``n_salts ~ max_expected_df / hot_threshold``.  With the defaults
+    (1024, 16) a near-threshold granule is ~0.5M pairs; sizing LSH to (256,
+    64) on a mega-cluster corpus took the largest partition's share of
+    emitted pairs from 0.34 to 0.035.
+    """
+    df = cache.track(rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("df")))
+    est = df.agg(
+        F.sum(F.col("df") * F.col("df")).alias("s2"), F.max("df").alias("max_df")
+    ).first()
+    if est["max_df"] is None or int(est["max_df"]) <= hot_threshold:
+        return pair(rows, rows, keys), est
+    hot = F.broadcast(df.filter(F.col("df") > hot_threshold).select(*keys))
+    cold = rows.join(hot, keys, "left_anti")
+    hot_rows = rows.join(hot, keys, "left_semi")
+    a = hot_rows.withColumn("salt", F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int"))
+    b = hot_rows.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
+    hot_pairs = pair(a, b, keys + ["salt"]).drop("salt")
+    return pair(cold, cold, keys).unionByName(hot_pairs), est
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     shingle_n: int = 5,
@@ -141,8 +204,8 @@ def lsh_candidate_pairs(
     bands: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_bucket_size: int = 1024,
-    n_salts: int = 16,
+    hot_bucket_size: int = HOT_KEY_THRESHOLD,
+    n_salts: int = N_SALTS,
     est_jaccard_threshold: float | None = None,
     encode_ids: bool = False,
 ) -> DataFrame:
@@ -176,24 +239,9 @@ def lsh_candidate_pairs(
       ORIGINAL ids (least/greatest after decode).  Long-id corpora skip
       this (already minimal).
 
-    Hot bkey buckets — giant exact-dup clusters — route to the
-    same exact salted join as :func:`ngram_jaccard_pairs`.
-
-    Skew machinery is pay-as-you-go (VERDICT r3 #2): the hot relation is a
-    map-side-combined agg over the persisted band rows, so checking it is
-    one cheap action; when NO bucket is hot (the common, clean-corpus case)
-    the plan short-circuits to the plain equi-join with no anti/semi/salt
-    stages at all.
-
-    Sizing on skewed corpora (measured, BENCH/LLM_SCALING.md): a COLD
-    bucket just under ``hot_bucket_size`` emits ~df^2/2 pairs inside one
-    (band, sig) join granule, and a salted hot bucket ~df^2/n_salts per
-    granule — so bound the per-task pair emission with
-    ``hot_bucket_size ~ sqrt(2 x target_pairs_per_task)`` and
-    ``n_salts ~ max_expected_df / hot_bucket_size``.  With defaults
-    (1024, 16) a near-threshold bucket's granule is ~0.5M pairs; sizing to
-    (256, 64) on a mega-cluster corpus took the largest partition's share
-    of emitted pairs from 0.34 to 0.035.
+    Hot bkey buckets — giant exact-dup clusters — take the salted path of
+    :func:`_keyed_self_join` (``hot_bucket_size``, ``n_salts``), which also
+    gives the sizing rule for skewed corpora.
     """
     rows_per_band = num_hashes // bands
     # the shingle+md5 map stage does ~300x the scan's work; a starved scan
@@ -267,42 +315,13 @@ def lsh_candidate_pairs(
         sig.select("doc_id", "sig", bkeys.alias("bkeys"))
         .select("doc_id", "sig", F.posexplode("bkeys").alias("band", "bkey"))
     )
-    hot = cache.track(
-        band_rows.groupBy("bkey")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > hot_bucket_size)
-        .select("bkey")
-    )
 
-    def sides(rows, extra=()):
-        a_ = rows.select(
-            F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"),
-            "band", "bkey", *extra,
-        )
-        b_ = rows.select(
-            F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"),
-            "bkey", *extra,
-        )
-        return a_, b_
+    def pair(a, b, keys):
+        return a.select(
+            F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"), "band", *keys
+        ).join(b.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"), *keys), keys)
 
-    if hot.isEmpty():
-        a_all, b_all = sides(band_rows)
-        cand = a_all.join(b_all, ["bkey"])
-    else:
-        cold = band_rows.join(F.broadcast(hot), ["bkey"], "left_anti")
-        hot_rows = band_rows.join(F.broadcast(hot), ["bkey"], "left_semi")
-        a_cold, b_cold = sides(cold)
-        cand_cold = a_cold.join(b_cold, ["bkey"])
-        ha = hot_rows.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int")
-        )
-        hb = hot_rows.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        )
-        a_hot, _ = sides(ha, ("salt",))
-        _, b_hot = sides(hb, ("salt",))
-        cand_hot = a_hot.join(b_hot, ["bkey", "salt"]).drop("salt")
-        cand = cand_cold.unionByName(cand_hot)
+    cand, _ = _keyed_self_join(band_rows, ["bkey"], "doc_id", hot_bucket_size, n_salts, pair)
 
     def slice_eq(b: int):
         eq = F.col("sig_a")[b * rows_per_band] == F.col("sig_b")[b * rows_per_band]
@@ -380,13 +399,42 @@ def simhash_segments(max_dist: int, sig_len: int = 16) -> list[tuple[int, int]]:
     return out
 
 
+def _segment_rows(sigs: DataFrame, bits_col: str, segs: list[tuple[int, int]]) -> DataFrame:
+    """``sigs`` with one row per pigeonhole segment of the bitstring
+    ``bits_col``: the segment index ``seg`` and its value ``segv``."""
+    sv = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(s).alias("seg"),
+                    F.substring(bits_col, start, length).alias("segv"),
+                )
+                for s, (start, length) in enumerate(segs)
+            ]
+        )
+    ).alias("sv")
+    return sigs.select("*", sv).select(*sigs.columns, "sv.seg", "sv.segv")
+
+
+def _first_agreeing_segment(segs: list[tuple[int, int]], a: str, b: str):
+    """Report-once: the index of the first segment on which the bitstrings
+    ``a`` and ``b`` agree.  A pair meets at every segment it agrees on and
+    is kept only where ``seg`` equals this — a filter, no ``distinct``."""
+    return F.coalesce(
+        *[
+            F.when(F.substring(a, start, length) == F.substring(b, start, length), F.lit(s))
+            for s, (start, length) in enumerate(segs)
+        ]
+    )
+
+
 def simhash_hamming_pairs(
     docs: DataFrame,
     max_dist: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_bucket_size: int = 1024,
-    n_salts: int = 16,
+    hot_bucket_size: int = HOT_KEY_THRESHOLD,
+    n_salts: int = N_SALTS,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_dist, recall 1.
 
@@ -402,91 +450,48 @@ def simhash_hamming_pairs(
     the DuckDB oracle (contract query ``simhash_hamming_pairs``) and the
     cross-test in tests/.
 
-    Skew hardening, same exact hot/salt split as
-    :func:`ngram_jaccard_pairs`: (seg, segv) buckets holding more than
-    ``hot_bucket_size`` docs (boilerplate-heavy corpora collapse many docs
-    onto popular segment values) route to a salted join — side a bucketed
-    by ``hash(doc) % n_salts``, side b replicated per salt — bounding the
-    largest task at ~D^2/n_salts while every pair still meets exactly once.
+    (seg, segv) buckets holding more than ``hot_bucket_size`` docs
+    (boilerplate-heavy corpora collapse many docs onto popular segment
+    values) take the salted path of :func:`_keyed_self_join`.
     """
     sig = simhash_signatures(docs, id_col, text_col)
     segs = simhash_segments(max_dist)
-    seg_rows = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("seg"),
-                        F.substring("simhash", start, length).alias("segv"),
-                    )
-                    for s, (start, length) in enumerate(segs)
-                ]
-            )
-        ).alias("sv"),
-    ).select("doc_id", "simhash", F.col("sv.seg").alias("seg"), F.col("sv.segv").alias("segv"))
-    seg_rows = cache.track(seg_rows)
-    hot = cache.track(
-        seg_rows.groupBy("seg", "segv")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > hot_bucket_size)
-        .select("seg", "segv")
-    )
-    def sides(rows, extra_cols=()):
-        a_ = rows.select(
-            F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"),
-            "seg", "segv", *extra_cols,
-        )
-        b_ = rows.select(
-            F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sb"),
-            "seg", "segv", *extra_cols,
-        )
-        return a_, b_
+    seg_rows = cache.track(_segment_rows(sig, "simhash", segs))
 
-    # pay-as-you-go skew split (VERDICT r3 #2): one cheap action on the
-    # persisted map-side-combined agg; clean corpora take the plain join
-    if hot.isEmpty():
-        a_all, b_all = sides(seg_rows)
-        cand = a_all.join(b_all, ["seg", "segv"])
-    else:
-        cold = seg_rows.join(F.broadcast(hot), ["seg", "segv"], "left_anti")
-        hot_rows = seg_rows.join(F.broadcast(hot), ["seg", "segv"], "left_semi")
-        a_cold, b_cold = sides(cold)
-        cand_cold = a_cold.join(b_cold, ["seg", "segv"])
-        ha = hot_rows.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int")
-        )
-        hb = hot_rows.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        )
-        a_hot, _ = sides(ha, ("salt",))
-        _, b_hot = sides(hb, ("salt",))
-        cand_hot = a_hot.join(b_hot, ["seg", "segv", "salt"]).drop("salt")
-        cand = cand_cold.unionByName(cand_hot)
+    def pair(a, b, keys):
+        return a.select(
+            F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"), *keys
+        ).join(b.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sb"), *keys), keys)
+
+    cand, _ = _keyed_self_join(seg_rows, ["seg", "segv"], "doc_id", hot_bucket_size, n_salts, pair)
     ham = sum(
         F.when(
             F.substring("sa", j + 1, 1) != F.substring("sb", j + 1, 1), 1
         ).otherwise(0)
         for j in range(16)
     )
-    # report-once: the first segment where the two signatures agree
-    first_match = F.coalesce(
-        *[
-            F.when(
-                F.substring("sa", start, length) == F.substring("sb", start, length),
-                F.lit(s),
-            )
-            for s, (start, length) in enumerate(segs)
-        ]
-    )
     return (
         cand.filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.col("seg") == first_match)
+        .filter(F.col("seg") == _first_agreeing_segment(segs, "sa", "sb"))
         .withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_dist)
         .select("doc_a", "doc_b", "hamming")
     )
+
+
+def _length_filter(na, nb, t: float):
+    """EXACT length filter of the Jaccard self-join (similarity-join
+    literature): |A∩B| <= min and |A∪B| >= max give jaccard <=
+    min(na,nb)/max(na,nb), so a pair whose gram counts differ by more than
+    the threshold ratio can never pass the final ``round(jaccard, 6) >= t``.
+
+    That final filter keeps every jaccard down to ``t - 5e-7``, so the
+    bound is ``na >= (t - 5e-7) * nb``: the ``5e-7 * ng`` slack keeps it
+    exact at any doc size (a bare ``-1`` is exact only up to ~2e6 grams
+    per doc), and the ``-1`` absorbs the float rounding of ``t * ng``.  It
+    never drops a pair the final filter keeps; the sliver of sub-threshold
+    pairs it lets through dies at that filter."""
+    return (na >= t * nb - 1 - 5e-7 * nb) & (nb >= t * na - 1 - 5e-7 * na)
 
 
 def ngram_jaccard_pairs(
@@ -495,8 +500,8 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_doc_freq: int = 1024,
-    n_salts: int = 16,
+    hot_doc_freq: int = HOT_KEY_THRESHOLD,
+    n_salts: int = N_SALTS,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard similarity pairs >= threshold.
 
@@ -506,22 +511,17 @@ def ngram_jaccard_pairs(
 
     Skew hardening (VERDICT r2 #6), still EXACT: a gram occurring in D docs
     produces D^2/2 join rows in one hash-partition task.  Grams with doc
-    frequency > ``hot_doc_freq`` (few by definition — broadcastable) are
-    routed to a SALTED self-join: side a buckets each row by
-    ``hash(doc) % n_salts``, side b replicates each row to every salt, the
-    join runs on (gram, salt).  Every (gram, a, b) pair still meets exactly
-    once (a's salt is a function of doc_a), so results are identical to the
-    plain join, but the largest task handles ~D^2/n_salts pair rows instead
-    of D^2 — the total work is inherent to exact intersection counting; the
-    salt spreads it.  Cold grams take the plain equi-join with no overhead
-    beyond one map-side-combined frequency agg.
+    frequency > ``hot_doc_freq`` take the salted path of
+    :func:`_keyed_self_join`; the total work is inherent to exact
+    intersection counting, the salt spreads it.  Its probe's ``sum(df^2)``
+    sizes the pair aggregation.
 
     Two further EXACT prunes on the pair pipeline (round 7):
 
-    - length filter: jaccard <= min(na,nb)/max(na,nb) always, so the join
-      drops size-mismatched pairs BEFORE the pair exchange (the query's
-      largest shuffle).  The per-doc gram count rides on each gram row,
-      computed pre-explode at zero extra shuffle cost.
+    - length filter (:func:`_length_filter`): the join drops size-mismatched
+      pairs BEFORE the pair exchange (the query's largest shuffle).  The
+      per-doc gram count rides on each gram row, computed pre-explode at
+      zero extra shuffle cost.
     - packed pair key: when ids are provably non-negative ints < 2^31, the
       (doc_a, doc_b) pair travels the exchange as ONE long and the pair agg
       groups on a single 8-byte key; unpacked (and cast back to the input
@@ -569,18 +569,6 @@ def ngram_jaccard_pairs(
     sizes = cache.track(
         grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     )
-    gram_df = cache.track(
-        grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    )
-    # one dim-sized action doubles as the skew probe AND the join-volume
-    # estimate: sum(df^2) IS the ordered join-row count, so the pair-agg
-    # partition count below derives from the data, not a constant
-    est = gram_df.agg(
-        F.sum(F.col("df") * F.col("df")).alias("s2"),
-        F.max("df").alias("max_df"),
-    ).first()
-    est_pair_rows = int(est["s2"] or 0) // 2
-    hot = gram_df.filter(F.col("df") > hot_doc_freq).select("gram")
     # one dim-sized action on the persisted per-doc size table serves BOTH
     # the exact min-size floor below AND (for integral ids) the packed-key
     # bounds — the id range decides whether a pair can ride in ONE long
@@ -609,15 +597,7 @@ def ngram_jaccard_pairs(
         a, b = a_side.alias("a"), b_side.alias("b")
         j = a.join(b, on=keys).filter(
             (F.col("a.doc_id") < F.col("b.doc_id"))
-            # EXACT length filter (similarity-join literature): i <= min and
-            # union >= max give jaccard <= min(na,nb)/max(na,nb), so a pair
-            # whose sizes differ by more than the threshold ratio can never
-            # pass — pruned BEFORE the pair exchange, where it is cheapest.
-            # The -1 slack absorbs double rounding of t*ng for arbitrary t
-            # (never drops a boundary pair; keeps at most a sliver of
-            # sub-threshold rows the jaccard filter removes as before).
-            & (F.col("a.ng") >= t * F.col("b.ng") - 1)
-            & (F.col("b.ng") >= t * F.col("a.ng") - 1)
+            & _length_filter(F.col("a.ng"), F.col("b.ng"), t)
         )
         if use_packed:
             return j.select(
@@ -630,22 +610,10 @@ def ngram_jaccard_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
 
-    # pay-as-you-go skew split (VERDICT r3 #2): the probe reads the
-    # persisted map-side-combined agg; clean corpora take the plain join
-    if est["max_df"] is None or int(est["max_df"]) <= hot_doc_freq:
-        all_pairs = pair_rows(grams, grams, ["gram"])
-    else:
-        cold = grams.join(F.broadcast(hot), "gram", "left_anti")
-        cold_pairs = pair_rows(cold, cold, ["gram"])
-        hot_rows = grams.join(F.broadcast(hot), "gram", "left_semi")
-        ha = hot_rows.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int")
-        )
-        hb = hot_rows.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        )
-        hot_pairs = pair_rows(ha, hb, ["gram", "salt"])
-        all_pairs = cold_pairs.unionByName(hot_pairs)
+    # the probe's sum(df^2) IS the ordered join-row count, so the pair-agg
+    # partition count below derives from the data, not a constant
+    all_pairs, est = _keyed_self_join(grams, ["gram"], "doc_id", hot_doc_freq, n_salts, pair_rows)
+    est_pair_rows = int(est["s2"] or 0) // 2
     # pair-count aggregation: an explicit repartition on the pair key turns
     # the groupBy into ONE complete HashAggregate instead of partial+final.
     # Partial aggregation is structurally useless here — a pair's duplicate
@@ -1146,61 +1114,37 @@ def dhash_hamming_pairs(
     ``(segment_idx, segment_value)``, refine with ``bit_count(xor)`` over
     the two 32-bit halves (pure JVM long ops — not 64 per-char
     comparisons), and keep each pair only in its FIRST agreeing segment
-    (report-once: a filter, never a distinct shuffle).  Corpora with a
-    hot segment value (e.g. millions of near-black thumbnails) take the
-    documented salt split of the text stack; this path stays simple
-    because the segment value space (2^13+ per segment) spreads organic
-    image corpora well."""
+    (report-once: a filter, never a distinct shuffle).  A hot segment
+    value (e.g. many near-black thumbnails) takes the salted path of
+    :func:`_keyed_self_join` at the module defaults ``HOT_KEY_THRESHOLD``
+    and ``N_SALTS``, so it never becomes one quadratic task."""
     segs = simhash_segments(max_dist, sig_len=64)
-    seg_rows = sigs.select(
-        F.col(id_col).alias("iid"),
-        "dhash",
-        "h_hi",
-        "h_lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("seg"),
-                        F.substring("dhash", start, length).alias("segv"),
-                    )
-                    for s, (start, length) in enumerate(segs)
-                ]
-            )
-        ).alias("sv"),
-    ).select(
-        "iid", "dhash", "h_hi", "h_lo",
-        F.col("sv.seg").alias("seg"), F.col("sv.segv").alias("segv"),
+    seg_rows = cache.track(
+        _segment_rows(
+            sigs.select(F.col(id_col).alias("iid"), "dhash", "h_hi", "h_lo"), "dhash", segs
+        )
     )
-    a = seg_rows.select(
-        F.col("iid").alias("id_a"), F.col("dhash").alias("da"),
-        F.col("h_hi").alias("hi_a"), F.col("h_lo").alias("lo_a"),
-        "seg", "segv",
-    )
-    b = seg_rows.select(
-        F.col("iid").alias("id_b"), F.col("dhash").alias("db"),
-        F.col("h_hi").alias("hi_b"), F.col("h_lo").alias("lo_b"),
-        "seg", "segv",
-    )
-    pairs = a.join(b, ["seg", "segv"]).filter(F.col("id_a") < F.col("id_b"))
+
+    def pair(a, b, keys):
+        return a.select(
+            F.col("iid").alias("id_a"), F.col("dhash").alias("da"),
+            F.col("h_hi").alias("hi_a"), F.col("h_lo").alias("lo_a"), *keys,
+        ).join(
+            b.select(
+                F.col("iid").alias("id_b"), F.col("dhash").alias("db"),
+                F.col("h_hi").alias("hi_b"), F.col("h_lo").alias("lo_b"), *keys,
+            ),
+            keys,
+        )
+
+    pairs, _ = _keyed_self_join(seg_rows, ["seg", "segv"], "iid", HOT_KEY_THRESHOLD, N_SALTS, pair)
     dist = F.bit_count(
         F.col("hi_a").bitwiseXOR(F.col("hi_b"))
     ) + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-    # report-once: keep the pair only in the FIRST segment where the two
-    # signatures agree (recomputed from the carried strings — a filter)
-    first_agree = F.coalesce(
-        *[
-            F.when(
-                F.substring("da", start, length)
-                == F.substring("db", start, length),
-                F.lit(s),
-            )
-            for s, (start, length) in enumerate(segs)
-        ]
-    )
     return (
-        pairs.withColumn("dist", dist)
+        pairs.filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("dist", dist)
         .filter(F.col("dist") <= max_dist)
-        .filter(F.col("seg") == first_agree)
+        .filter(F.col("seg") == _first_agreeing_segment(segs, "da", "db"))
         .select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
     )

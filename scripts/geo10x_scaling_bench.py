@@ -15,6 +15,9 @@ Per config the script also runs an untimed diagnostic pass reporting the
 cell join's final partition count and max per-partition output share —
 whether AQE's coalescing/skew handling keeps the join balanced at 10x.
 
+The AOI is Luxembourg when installed, else the committed stand-in
+(``bench.bench_aoi``; each RESULT records which).
+
 Protocol identical to scripts/scaling_bench.py (fresh subprocess + JVM
 per run, warmed Python workers, interleaved reps, per-run /proc/stat
 steal).  Run EXCLUSIVELY; results go to BENCH/BASELINE.md round-6
@@ -48,7 +51,9 @@ spark.range(0, cpus * 4, 1, cpus * 4).mapInPandas(ident, "id long").count()
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
-aoi = wkt.load_ring("/root/reference/data/luxembourg.wkt")
+import bench
+aoi_name, aoi_path = bench.bench_aoi()
+aoi = wkt.load_ring(aoi_path)
 t0 = time.time()
 tiles = gridop.make_grid(spark, aoi, chip, num_partitions=cpus * 8)
 n_tiles = tiles.count()
@@ -72,7 +77,7 @@ hist = (j1.groupBy(F.spark_partition_id().alias("p"))
 max_share = round(max(r["n"] for r in hist) / max(n_join, 1), 4)
 
 print("RESULT " + json.dumps({
-    "cpus": cpus, "wall_sec": round(wall, 2), "n_tiles": n_tiles,
+    "cpus": cpus, "aoi": aoi_name, "wall_sec": round(wall, 2), "n_tiles": n_tiles,
     "n_props": n_props, "n_join": n_join, "rows": rows,
     "throughput_rows_per_sec": round(rows / wall, 1),
     "join_final_partitions": len(hist),

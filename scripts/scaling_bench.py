@@ -4,9 +4,10 @@ No real cluster exists in this sandbox, so the N -> 4N executor criterion is
 evidenced by running the SAME north-star job at local[2] and local[8] on
 identical input and reporting throughput at both plus scaling efficiency
 (target >= 0.8).  The job is the engine's headline pipeline: Luxembourg AOI
--> UTM grid tiles -> synthetic chips -> zonal label proportions -> argmax
-foreign intersect join; throughput = (tiles + proportion rows + join rows)
-per second.
+(else the committed stand-in, per ``bench.bench_aoi``; each RESULT records
+which) -> UTM grid tiles -> synthetic chips -> zonal label proportions ->
+argmax foreign intersect join; throughput = (tiles + proportion rows + join
+rows) per second.
 
 Each run executes in its own subprocess: re-creating SparkSessions inside
 one Python process shares a single JVM gateway that degrades monotonically
@@ -45,7 +46,9 @@ spark.range(0, cpus * 4, 1, cpus * 4).mapInPandas(ident, "id long").count()
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
-aoi = wkt.load_ring("/root/reference/data/luxembourg.wkt")
+import bench
+aoi_name, aoi_path = bench.bench_aoi()
+aoi = wkt.load_ring(aoi_path)
 t0 = time.time()
 tiles = gridop.make_grid(spark, aoi, chip, num_partitions=cpus * 4)
 n_tiles = tiles.count()
@@ -63,7 +66,7 @@ props_o.select(F.lit(1).alias("k")).unionByName(
 n_props = int(obs_p.get["n"]); n_join = int(obs_j.get["n"])
 wall = time.time() - t0
 rows = n_tiles + n_props + n_join
-print("RESULT " + json.dumps({"cpus": cpus, "wall_sec": round(wall, 2),
+print("RESULT " + json.dumps({"cpus": cpus, "aoi": aoi_name, "wall_sec": round(wall, 2),
       "rows": rows, "throughput_rows_per_sec": round(rows / wall, 1)}))
 spark.stop()
 """
@@ -120,7 +123,7 @@ North rule (BASELINE.json): throughput scaling efficiency >= 0.8 from N to
 4N executors.  Sandbox has no cluster; per the driver instruction this is
 evidenced by the same job at `local[2]` vs `local[8]` on identical input.
 
-**Job**: Luxembourg AOI -> UTM grid @ {CHIP_SIZE_M} m ({results[2]['rows']} output rows:
+**Job**: {results[2]['aoi']} AOI -> UTM grid @ {CHIP_SIZE_M} m ({results[2]['rows']} output rows:
 tiles + zonal-proportion rows + argmax-join rows), fused synthetic 320x320
 chip acquisition + zonal label proportions (payload never crosses the Arrow
 boundary), cell-indexed argmax intersect join.  Python workers

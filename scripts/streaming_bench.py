@@ -15,7 +15,8 @@ per-run /proc/stat steal):
   trigger's ``stateOperators`` progress.
 * ``stream_chip_zonal`` — the foreachBatch geo-ingest rollup (tile files
   -> synthetic chips -> zonal proportions -> catalog MERGE) over a
-  Luxembourg 250 m grid (~43k tiles) streamed as 8 files at
+  Luxembourg 250 m grid (~43k tiles; else the committed stand-in AOI,
+  per ``bench.bench_aoi``, recorded as ``aoi``) streamed as 8 files at
   maxFilesPerTrigger=2.
 
 A first protocol attempt at 1x (100k events / 10k tiles) measured
@@ -122,7 +123,9 @@ with tempfile.TemporaryDirectory() as td:
     spark.streams.removeListener(tap)
 
     # --- chip->zonal rollup over a 250 m Luxembourg grid --------------
-    aoi = wkt.load_ring("/root/reference/data/luxembourg.wkt")
+    import bench
+    aoi_name, aoi_path = bench.bench_aoi()
+    aoi = wkt.load_ring(aoi_path)
     tiles = gridop.make_grid(spark, aoi, 250, num_partitions=cpus * 4)
     tdir = os.path.join(td, "tiles")
     tiles.repartition(8).write.parquet(tdir)
@@ -135,6 +138,7 @@ with tempfile.TemporaryDirectory() as td:
             max_files_per_trigger=2),
         tap)
     out["chip_zonal"]["n_tiles"] = n_tiles
+    out["chip_zonal"]["aoi"] = aoi_name
     spark.streams.removeListener(tap)
 
 print("RESULT " + json.dumps(out))

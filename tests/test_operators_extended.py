@@ -603,6 +603,22 @@ class TestDedupUnits:
         )
         assert len(sizes) == 8 and max(r["count"] for r in sizes) < 50
 
+    def test_jaccard_length_filter_exact_under_rounding(self, spark):
+        """The length prune must keep every pair the final round(jaccard, 6)
+        >= t keeps, at any doc size: at na=2,999,998, nb=6,000,000 the
+        Jaccard bound na/nb = 0.49999967 rounds to 0.5, so the pair stays
+        (a bare -1 slack pruned it), while a pair whose bound rounds below
+        t is still pruned."""
+        t = 0.5
+        rows = [(2_999_998, 6_000_000), (6_000_000, 2_999_998), (2_999_990, 6_000_000)]
+        assert [round(min(r) / max(r), 6) >= t for r in rows] == [True, True, False]
+        df = spark.createDataFrame(rows, "na long, nb long")
+        kept = {
+            (r["na"], r["nb"])
+            for r in df.filter(dedup._length_filter(F.col("na"), F.col("nb"), t)).collect()
+        }
+        assert kept == set(rows[:2])
+
 
 class TestDistributedKatana:
     def test_many_aois_match_driver_recursion(self, spark):
@@ -1273,6 +1289,53 @@ class TestSimhashSkew:
             ).collect()
         }
         assert plain and salted == plain
+
+
+class TestDhashSkew:
+    @staticmethod
+    def _sigs(spark):
+        """100 near-black thumbnails (only the low 12 bits set, so every
+        segment above them is all zeros: one hot value shared by 100 tiles)
+        plus 40 random hashes and one-bit near copies of ten of them."""
+        rng = np.random.default_rng(7)
+        vals = [int(v) for v in rng.integers(0, 1 << 12, 100)]
+        rand = [int(v) for v in rng.integers(0, 2**64, 40, dtype=np.uint64)]
+        vals += rand + [v ^ (1 << int(b)) for v, b in zip(rand[:10], rng.integers(0, 64, 10))]
+        rows = [
+            (f"t{i:03d}", format(v, "064b"), v >> 32, v & 0xFFFFFFFF)
+            for i, v in enumerate(vals)
+        ]
+        return rows, spark.createDataFrame(
+            rows, "tile_id string, dhash string, h_hi long, h_lo long"
+        )
+
+    @pytest.mark.parametrize("max_dist", [1, 4])
+    def test_hot_segment_salted_exact(self, spark, monkeypatch, max_dist):
+        """A hot segment value takes the salted join (the module's
+        threshold is lowered to reach it on a small fixture) and returns
+        exactly the plain join's (id_a, id_b, dist) set, which is the
+        brute-force all-pairs answer."""
+        rows, sigs = self._sigs(spark)
+
+        def run():
+            out = dedup.dhash_hamming_pairs(sigs, max_dist=max_dist)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            return {(r["id_a"], r["id_b"], r["dist"]) for r in out.collect()}, plan
+
+        plain, plain_plan = run()
+        monkeypatch.setattr(dedup, "HOT_KEY_THRESHOLD", 16)
+        monkeypatch.setattr(dedup, "N_SALTS", 8)
+        salted, salted_plan = run()
+        assert "LeftAnti" not in plain_plan and "LeftAnti" in salted_plan
+        brute = set()
+        for i, (ia, da, _, _) in enumerate(rows):
+            for ib, db, _, _ in rows[i + 1:]:
+                d = bin(int(da, 2) ^ int(db, 2)).count("1")
+                if d <= max_dist:
+                    brute.add((min(ia, ib), max(ia, ib), d))
+        # at least the ten one-bit near copies
+        assert len(plain) >= 10 and plain == brute
+        assert salted == plain
 
 
 class TestTextCuration:

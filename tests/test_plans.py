@@ -82,7 +82,13 @@ class TestPlanShapes:
         """VERDICT r3 #2 pay-as-you-go: the contract fixtures have no hot
         bucket, so the plan must be the plain equi-join — no anti/semi
         (hot-split) stages, no salt explode."""
-        for name in ("dedup_minhash_lsh", "simhash_hamming_pairs", "ngram_jaccard_pairs"):
+        for name in (
+            "dedup_minhash_lsh",
+            "simhash_hamming_pairs",
+            "ngram_jaccard_pairs",
+            "image_dhash_pairs",
+            "audio_fingerprint_pairs",
+        ):
             plan = _plan(spark, name)
             assert "LeftAnti" not in plan, f"{name} kept the hot-split anti join"
             assert "LeftSemi" not in plan, f"{name} kept the hot-split semi join"
