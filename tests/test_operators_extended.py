@@ -1270,6 +1270,18 @@ class TestPipJoinStrategies:
         assert not re.search(r"BroadcastHashJoin \[cell", plan)
 
 
+    def test_broadcast_path_refuses_past_cap(self, spark, monkeypatch):
+        """The broadcast path's driver collect fails loudly past
+        MAX_BROADCAST_POLYS instead of pulling an unbounded relation."""
+        points, polys, _, _ = self._inputs(spark)
+        monkeypatch.setattr(joins, "MAX_BROADCAST_POLYS", 3)
+        with pytest.raises(ValueError, match="broadcast_polys=False"):
+            joins.point_in_polygon_join(points, polys)
+        assert joins.point_in_polygon_join(
+            points, polys, broadcast_polys=False
+        ).count() > 0
+
+
 class TestSimhashSkew:
     def test_hot_segment_salted_exact(self, spark):
         """A corpus where one segment value is shared by most docs: the
@@ -1432,17 +1444,14 @@ class TestStratifiedSample:
 
 
 class TestIntervalSpatialStrategies:
-    """VERDICT r5 next #2: the cell-shuffle twin of interval_spatial_join
-    must be result-identical to the broadcast path on the triangle
-    fixtures (non-rectangular footprints + a null-footprint event + an
-    out-of-window event), and its plan must contain no driver collect of
-    the event relation and no broadcast of the cell join."""
+    """interval_spatial_join must match a brute-force numpy reference on
+    the triangle fixtures (non-rectangular footprints + a null-footprint
+    event + out-of-window events), and building its plan must not collect
+    the event relation to the driver."""
 
-    def _inputs(self, spark):
-        from __spark_entry__ import _boxes_pdf
+    def _rows(self):
         from geetiles_spark.functions.oracle_sql import event_triangles
 
-        polys = spark.createDataFrame(_boxes_pdf())
         rows = []
         for e in event_triangles():
             ring = np.array(e["verts"] + [e["verts"][0]], dtype=np.float64)
@@ -1465,35 +1474,59 @@ class TestIntervalSpatialStrategies:
                 "geometry_wkb": None,
             }
         )
-        ev = spark.createDataFrame(pd.DataFrame(rows))
+        return rows
+
+    def _inputs(self, spark):
+        from __spark_entry__ import _boxes_pdf
+
+        polys = spark.createDataFrame(_boxes_pdf())
+        ev = spark.createDataFrame(pd.DataFrame(self._rows()))
         return polys, ev
 
-    def test_cell_twin_matches_broadcast(self, spark):
+    @staticmethod
+    def _reference(boxes, rows, start, end):
+        """Every tile x in-window event: the exact box-vs-ring test, or the
+        bbox test for a null footprint."""
+        bx = [boxes[c].to_numpy() for c in ("minx", "miny", "maxx", "maxy")]
+        out = set()
+        for e in rows:
+            if not (e["start"] >= start and e["end"] <= end):
+                continue
+            if e["geometry_wkb"] is None:
+                hit = (
+                    (bx[0] <= e["maxx"]) & (bx[2] >= e["minx"])
+                    & (bx[1] <= e["maxy"]) & (bx[3] >= e["miny"])
+                )
+            else:
+                hit = geom.boxes_intersect_polygon(
+                    *bx, geom.wkb_to_polygon(e["geometry_wkb"])
+                )
+            out |= {(t, e["event_id"]) for t in boxes["tile_id"][hit]}
+        return out
+
+    def test_matches_bruteforce_reference(self, spark):
+        from __spark_entry__ import _boxes_pdf
+
         polys, ev = self._inputs(spark)
-        a = {
+        got = {
             (r["tile_id"], r["event_id"])
             for r in joins.interval_spatial_join(
                 polys, ev, "2020-01-01", "2020-12-31"
             ).collect()
         }
-        b = {
-            (r["tile_id"], r["event_id"])
-            for r in joins.interval_spatial_join(
-                polys, ev, "2020-01-01", "2020-12-31", broadcast_events=False
-            ).collect()
-        }
-        assert a == b and len(a) > 25
-        # the null-footprint event matched via bbox in both
-        assert any(eid == 100 for _, eid in a)
-        # out-of-window triangles (start 2019) excluded in both
+        expect = self._reference(
+            _boxes_pdf(), self._rows(), "2020-01-01", "2020-12-31"
+        )
+        assert got == expect and len(got) > 25
+        # the null-footprint event matched via its bbox
+        assert any(eid == 100 for _, eid in got)
+        # out-of-window triangles (start 2019) excluded
         from geetiles_spark.functions.oracle_sql import event_triangles
 
         out_ids = {e["event_id"] for e in event_triangles() if e["start"] < "2020"}
-        assert not any(eid in out_ids for _, eid in a)
+        assert not any(eid in out_ids for _, eid in got)
 
-    def test_cell_twin_never_collects_events(self, spark, monkeypatch):
-        import re
-
+    def test_never_collects_events(self, spark, monkeypatch):
         import pyspark.sql.classic.dataframe as cdf
 
         polys, ev = self._inputs(spark)
@@ -1503,12 +1536,92 @@ class TestIntervalSpatialStrategies:
 
         monkeypatch.setattr(cdf.DataFrame, "collect", boom)
         df = joins.interval_spatial_join(
-            polys, ev, "2020-01-01", "2020-12-31",
-            broadcast_events=False, level=6,
+            polys, ev, "2020-01-01", "2020-12-31", level=6,
         )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan
-        assert not re.search(r"BroadcastHashJoin \[cell", plan)
+        df._jdf.queryExecution().executedPlan()
+
+
+def _grid_tiles() -> pd.DataFrame:
+    """6 x 6 unit box tiles over [0, 6]^2."""
+    rows = []
+    for k in range(36):
+        x0, y0 = float(k % 6), float(k // 6)
+        rows.append(
+            {
+                "row_idx": k, "tile_id": f"t{k}",
+                "geometry_wkb": geom.polygon_to_wkb(
+                    geom.box_ring(x0, y0, x0 + 1, y0 + 1)
+                ),
+                "minx": x0, "miny": y0, "maxx": x0 + 1, "maxy": y0 + 1,
+            }
+        )
+    return pd.DataFrame(rows)
+
+
+def _footprints() -> pd.DataFrame:
+    """A triangle, an L-shape and a box with bounds on a 0.25 lattice, so a
+    decimal(12,2) cast of the bounds is exact."""
+    shapes = [
+        [(0.5, 0.5), (3.75, 1.25), (1.25, 4.5)],
+        [(2.0, 2.0), (5.5, 2.0), (5.5, 2.75), (2.75, 2.75), (2.75, 5.5), (2.0, 5.5)],
+        [(4.25, 0.25), (5.75, 0.25), (5.75, 1.5), (4.25, 1.5)],
+    ]
+    rows = []
+    for i, verts in enumerate(shapes):
+        ring = geom.ring_close(np.array(verts, dtype=np.float64))
+        rows.append(
+            {
+                "row_idx": i, "tile_id": f"f{i}", "event_id": i,
+                "geometry_wkb": geom.polygon_to_wkb(ring),
+                "minx": ring[:, 0].min(), "miny": ring[:, 1].min(),
+                "maxx": ring[:, 0].max(), "maxy": ring[:, 1].max(),
+                "start": "2020-02-01", "end": "2020-03-01",
+            }
+        )
+    return pd.DataFrame(rows)
+
+
+def _decimal_bounds(df):
+    return df.withColumns(
+        {c: F.col(c).cast("decimal(12,2)") for c in ("minx", "miny", "maxx", "maxy")}
+    )
+
+
+def _intersect(spark, other):
+    tiles = spark.createDataFrame(_grid_tiles())
+    return joins.intersect_join_cells(tiles, other.drop("event_id", "start", "end"))
+
+
+def _interval(spark, other):
+    tiles = spark.createDataFrame(_grid_tiles())
+    return joins.interval_spatial_join(
+        tiles, other.drop("row_idx", "tile_id"), "2020-01-01", "2020-12-31"
+    )
+
+
+def _pip_shuffle(spark, other):
+    rng = np.random.default_rng(5)
+    pts = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "point_id": np.arange(400, dtype=np.int64),
+                "lon": rng.uniform(0.0, 6.0, 400),
+                "lat": rng.uniform(0.0, 6.0, 400),
+            }
+        )
+    )
+    polys = other.drop("row_idx", "event_id", "start", "end")
+    return joins.point_in_polygon_join(pts, polys, broadcast_polys=False)
+
+
+@pytest.mark.parametrize("op", [_intersect, _interval, _pip_shuffle])
+def test_decimal_bounds_match_double_bounds(spark, op):
+    """DECIMAL bbox columns (what SQL arithmetic on literals yields) take
+    the cell explode like doubles do: same rows, no TypeError."""
+    other = spark.createDataFrame(_footprints())
+    want = sorted(tuple(r) for r in op(spark, other).collect())
+    got = sorted(tuple(r) for r in op(spark, _decimal_bounds(other)).collect())
+    assert got == want and len(want) > 3
 
 
 class TestLshShuffleReduction:

@@ -2,9 +2,8 @@
 plans survive a 100x scale-up, asserted over the real contract queries.
 
 - no CartesianProduct anywhere, ever;
-- BroadcastNestedLoopJoin only where a theta join against a tiny broadcast
-  catalog is the INTENDED plan (the interval+spatial bbox join — ~25 events
-  broadcast; at catalog scale the cell join replaces it);
+- no BroadcastNestedLoopJoin except a one-row scalar attach (vocab_topk):
+  every tile-vs-footprint join is one broadcast cell equi-join;
 - relational scans push their filters into the parquet reader and prune
   columns (q1 must not read l_comment).
 """
@@ -19,12 +18,11 @@ import __spark_entry__ as E  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
-# bbox theta join vs broadcast event catalog: BNLJ is the right physical
-# plan for a ~25-row broadcast side; everything else must be hash/equi
-# vocab_topk: Catalyst constant-folds the literal join key of the 1-row
-# global-total attach into an Identity broadcast -> BNLJ with a ONE-row
-# build side over k<=256 probe rows (O(k) work, the optimal scalar attach)
-BNLJ_ALLOWED = {"interval_spatial_join", "interval_spatial_join_exact", "vocab_topk"}
+# every join must be hash/equi, except vocab_topk: Catalyst constant-folds
+# the literal join key of the 1-row global-total attach into an Identity
+# broadcast -> BNLJ with a ONE-row build side over k<=256 probe rows (O(k)
+# work, the optimal scalar attach)
+BNLJ_ALLOWED = {"vocab_topk"}
 
 
 def _all_queries():
@@ -48,6 +46,30 @@ class TestPlanShapes:
                 assert "BroadcastNestedLoopJoin" not in plan, (
                     f"{name} plans a nested-loop join"
                 )
+
+    def test_tile_footprint_joins_are_one_broadcast_cell_join(self, spark):
+        """J1/J2 and the J5 flood join share one cell pair-join: exactly one
+        broadcast hash join on the cell id, no nested loop.  The J1/J2
+        operator counts are pinned so the shared join keeps their plans."""
+        import re
+
+        pinned = {"geo_intersect_join": (5, 4), "geo_foreign_props": (5, 5)}
+        for name in (
+            "geo_intersect_join",
+            "geo_foreign_props",
+            "interval_spatial_join",
+            "interval_spatial_join_exact",
+        ):
+            plan = _plan(spark, name)
+            assert len(re.findall(r"BroadcastHashJoin \[cell", plan)) == 1, name
+            assert "BroadcastNestedLoopJoin" not in plan, name
+            if name in pinned:
+                # (MapInPandas nodes, Exchange nodes incl. BroadcastExchange)
+                got = (
+                    len(re.findall(r"\bMapInPandas\b", plan)),
+                    plan.count("Exchange"),
+                )
+                assert got == pinned[name], (name, got)
 
     def test_q1_pushdown_and_pruning(self, spark):
         plan = _plan(spark, "q1_pricing_summary")
