@@ -1829,43 +1829,46 @@ def _q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, [float(x) for x in qvec], k=10)
 
 
-# contract IVF index: written ONCE per process per fixture dir and removed
-# at interpreter exit — a fresh mkdtemp per invocation accumulated full
-# index copies in /tmp across contract/bench runs (ADVICE r4).  Keyed on
-# the fixture path; the TemporaryDirectory object is held so it survives
-# until exit, then self-cleans.
-_IVF_INDEX_CACHE: dict[str, tuple[object, str, object]] = {}
+# contract IVF index: committed ONCE per process per fixture dir to a
+# temporary catalog removed at interpreter exit — a fresh mkdtemp per
+# invocation accumulated full index copies in /tmp across contract/bench
+# runs (ADVICE r4).  Keyed on the fixture path; the TemporaryDirectory
+# object is held so it survives until exit, then self-cleans.
+_IVF_INDEX_CACHE: dict[str, tuple[object, object]] = {}
 
 
-def _ivf_contract_index(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
+def _ivf_contract_index(spark: SparkSession, sf_dir: str):
     got = _IVF_INDEX_CACHE.get(sf_dir)
     if got is None:
         import tempfile
 
+        from geetiles_spark.catalog import Catalog
+
         d = tempfile.TemporaryDirectory(prefix="ivf_contract_")
-        path = d.name + "/index"
-        emb = _t(spark, sf_dir, "embeddings")
-        C = similarity.ivf_write_index(emb, path, n_clusters=8)
-        got = (d, path, C)
+        cat = Catalog(d.name)
+        similarity.ivf_index_commit(
+            spark, cat, _t(spark, sf_dir, "embeddings"), n_clusters=8
+        )
+        got = (d, cat)
         _IVF_INDEX_CACHE[sf_dir] = got
-    return got[1], got[2]
+    return got[1]
 
 
 def _q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN through the MATERIALIZED index (VERDICT r3 #4): write the
-    corpus partitionBy(cluster), probe with nprobe == n_clusters — the
-    probe covers the whole partition of the corpus, so the result must
-    EQUAL the brute top-k and the same DuckDB oracle as ``embedding_topk``
-    hash-checks quantizer + assignment + partition-pruned probe + rerank
-    end-to-end (a vector dropped or double-assigned by the index write
-    breaks equality).  The cluster predicate reaches the scan as
-    PartitionFilters (pinned by pytest); partial-probe recall is asserted
-    in pytest."""
+    """IVF ANN through the catalog-committed index (VERDICT r3 #4): the
+    corpus is committed partitioned BY cluster, the probe runs with
+    nprobe == n_clusters — the probe covers the whole partition of the
+    corpus, so the result must EQUAL the brute top-k and the same DuckDB
+    oracle as ``embedding_topk`` hash-checks quantizer + assignment +
+    partition-pruned probe + rerank end-to-end (a vector dropped or
+    double-assigned by the index commit breaks equality).  The cluster
+    predicate reaches the scan as PartitionFilters (pinned by pytest);
+    partial-probe recall is asserted in pytest."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    path, C = _ivf_contract_index(spark, sf_dir)
-    return similarity.ivf_query_index(
-        spark, path, C, [float(x) for x in qvec], k=10, nprobe=8
+    return similarity.ivf_query_catalog(
+        spark, _ivf_contract_index(spark, sf_dir), [float(x) for x in qvec],
+        k=10, nprobe=8,
     )
 
 
@@ -1889,15 +1892,15 @@ def _q_embedding_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_embedding_ivf_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch probe against the materialized IVF index, full probe: one
+    """Batch probe against the catalog IVF index, full probe: one
     partition-pruned scan serves all queries; equality with the brute batch
     oracle checks the per-cluster query masking end-to-end.  Shares the
     per-process index of :func:`_ivf_contract_index` (same corpus, same
     deterministic quantizer)."""
     emb = _t(spark, sf_dir, "embeddings")
-    path, C = _ivf_contract_index(spark, sf_dir)
-    return similarity.ivf_query_index_batch(
-        spark, path, C, _emb_queries(emb), k=10, nprobe=8
+    return similarity.ivf_query_catalog_batch(
+        spark, _ivf_contract_index(spark, sf_dir), _emb_queries(emb),
+        k=10, nprobe=8,
     ).orderBy("query_id", "rank")
 
 

@@ -751,7 +751,7 @@ def lsh_pairs_oracle_sql(
     n_tables: int = 4,
 ) -> str:
     """ANN near-dup oracle: the seeded hyperplane matrices of
-    ``operators.similarity.hyperplane_buckets`` are emitted as SQL literals,
+    ``operators.similarity.lsh_cosine_pairs`` are emitted as SQL literals,
     the sign-bit bucketing + bucket equi-join + exact cosine refine re-run in
     DuckDB over the same ``embeddings`` view."""
     import numpy as np

@@ -2,14 +2,22 @@
 
 Baseline: brute-force cosine top-k, computed entirely JVM-side
 (``zip_with`` + ``aggregate`` in double precision — no UDF, no collect).
-Scale path: random-hyperplane LSH bucketing — embeddings hash to a sign-bit
-bucket; queries search their bucket plus Hamming-ring-1 neighbors, bounding
-candidates to a ~2^-bits fraction of the corpus before the exact refine.
-The hyperplanes are a seeded numpy matrix broadcast to executors; the
-projection runs in an Arrow-batched pandas UDF (vectorized matmul).
+A batch of queries scans the corpus once through one Arrow-batched partial
+top-k kernel (:func:`cosine_topk_batch`).
+
+IVF ANN: a seeded spherical k-means quantizer, committed with the vectors to
+a snapshot ``Catalog`` table partitioned BY cluster
+(:func:`ivf_index_commit`).  A probe (:func:`ivf_query_catalog`,
+:func:`ivf_query_catalog_batch`) reads only its probed cluster directories
+(PartitionFilters) and reranks them exactly; the batch probe reuses the
+partial top-k kernel with a per-cluster query mask.
 
 Near-duplicate detection: cosine pairs above a threshold, either brute
-(small corpora) or bucketed (scale).
+block-nested-loop (:func:`cosine_pairs`) or random-hyperplane LSH buckets
+(:func:`lsh_cosine_pairs`).
+
+Zero vectors: a zero-norm corpus row never ranks and never pairs, and a
+zero query scores 0 against every row.
 """
 
 from __future__ import annotations
@@ -39,6 +47,14 @@ def _norm(a):
     )
 
 
+def _unit(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row-normalized float64 matrix and its row norms.  The norm floor
+    keeps a zero row at zero (its sims are 0) instead of NaN."""
+    mat = np.asarray(mat, dtype=np.float64)
+    norms = np.linalg.norm(mat, axis=1)
+    return mat / np.maximum(norms, 1e-30)[:, None], norms
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -50,14 +66,17 @@ def cosine_topk(
 
     Returns (rank, vec_id, cos_sim rounded to 6), rank 1..k, ties broken by
     id.  The scan is embarrassingly parallel; the only shuffle is the final
-    k-row ordering (a tree-reduced takeOrdered under AQE).
+    k-row ordering (a tree-reduced takeOrdered under AQE).  Zero-norm rows
+    are filtered out before the division (they never rank).
     """
     q = [float(x) for x in query_vec]
-    qn = float(np.sqrt(np.sum(np.asarray(q) ** 2)))
+    qn = max(float(np.sqrt(np.sum(np.asarray(q) ** 2))), 1e-30)
     qcol = F.array(*[F.lit(x) for x in q])
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     sim = (_dot(vec_d, qcol) / (_norm(vec_d) * F.lit(qn))).alias("cos_sim")
-    scored = embeddings.select(F.col(id_col).alias("vec_id"), F.round(sim, 6).alias("cos_sim"))
+    scored = embeddings.filter(_norm(vec_d) > 0).select(
+        F.col(id_col).alias("vec_id"), F.round(sim, 6).alias("cos_sim")
+    )
     w = Window.orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -82,76 +101,100 @@ def cosine_topk_batch(
     of scans.
 
     Physical plan: the query block (the small side by contract —
-    O(n_queries x dim) driver state) is collected once and broadcast; an
-    Arrow-batched ``mapInPandas`` computes the (batch x Q) similarity
-    matrix per corpus batch with one BLAS matmul and emits only each
-    query's PER-BATCH top-k (``argpartition``), so the terminal shuffle
-    carries <= n_batches x Q x k rows, not n x Q; a per-query window rank
-    finishes globally.  Output (query_id, rank, vec_id, cos_sim), rank
-    1..k, ties by id — per query identical to :func:`cosine_topk`.
+    O(n_queries x dim) driver state) is collected once and broadcast, and
+    :func:`_batch_topk` scores it against every corpus batch with one BLAS
+    matmul.  Output (query_id, rank, vec_id, cos_sim), rank 1..k, ties by
+    id — per query identical to :func:`cosine_topk`.
     """
-    spark = embeddings.sparkSession
-    out_schema = T.StructType(
+    return _batch_topk(
+        embeddings, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    )
+
+
+def _probe(C: np.ndarray, Q: np.ndarray, nprobe: int) -> np.ndarray:
+    """The IVF probe rule: each query probes its ``nprobe`` nearest
+    centroids.  Returns the (n_clusters, n_queries) probe mask."""
+    order = np.argsort(-(Q @ C.T), axis=1)[:, : min(nprobe, len(C))]
+    mask = np.zeros((len(C), len(Q)), dtype=bool)
+    mask[order, np.arange(len(Q))[:, None]] = True
+    return mask
+
+
+def _batch_topk(
+    cand: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    centroids: np.ndarray | None = None,
+    nprobe: int = 0,
+) -> DataFrame:
+    """Per-query top-k of ``cand`` for a collected query block in ONE scan:
+    per Arrow batch, one (batch x Q) matmul and each query's batch-local
+    top-k, so the terminal shuffle carries at most n_batches x Q x k rows;
+    a per-query window rank finishes globally.
+
+    With ``centroids`` (an IVF probe), ``cand`` carries a ``cluster``
+    column: the scan keeps only the union of probed clusters (a partition
+    filter on a cluster-partitioned table) and each row scores only against
+    the queries that probe its cluster.  Output (query_id, rank, vec_id,
+    cos_sim); the schema comes from ``cand`` and ``queries`` whether or
+    not there are queries."""
+    spark = cand.sparkSession
+    schema = T.StructType(
         [
             T.StructField("query_id", queries.schema[query_id_col].dataType),
-            T.StructField("rank", T.IntegerType(), False),
-            T.StructField("vec_id", embeddings.schema[id_col].dataType),
+            T.StructField("vec_id", cand.schema[id_col].dataType),
             T.StructField("cos_sim", T.DoubleType()),
         ]
     )
     rows = queries.select(query_id_col, query_vec_col).collect()
     if not rows:
-        return spark.createDataFrame([], out_schema)
-    qids = [r[query_id_col] for r in rows]
-    Q = np.stack(
-        [np.asarray(r[query_vec_col], dtype=np.float64) for r in rows]
-    )
-    # norm floor: a zero query vector scores 0 everywhere instead of NaN
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
-    b = spark.sparkContext.broadcast((qids, Q))
+        partial = spark.createDataFrame([], schema)
+    else:
+        Q, _ = _unit(np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]))
+        mask = None
+        cols = [id_col, vec_col]
+        if centroids is not None:
+            mask = _probe(centroids, Q, nprobe)
+            union = [int(c) for c in np.nonzero(mask.any(axis=1))[0]]
+            cand = cand.filter(F.col("cluster").isin(union))
+            cols.append("cluster")
+        b = spark.sparkContext.broadcast(([r[0] for r in rows], Q, mask))
 
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[query_id_col].dataType),
-            T.StructField("vec_id", embeddings.schema[id_col].dataType),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
+        def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            ids_b, Qm, pm = b.value
+            qarr = np.asarray(ids_b, dtype=object)
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                mat, norms = _unit(np.stack(pdf[vec_col].to_numpy()))
+                sims = np.round(mat @ Qm.T, 6)  # (n, Q)
+                # a zero-norm row never ranks, nor does a row outside a
+                # query's probed clusters: both score -inf, so the
+                # threshold below is never NaN (a NaN threshold made
+                # `sims >= thr` all-False and silently dropped every
+                # valid candidate of the batch, ADVICE r4)
+                valid = (norms > 0)[:, None]  # (n, 1), or (n, Q) once masked
+                if pm is not None:
+                    valid = valid & pm[pdf["cluster"].to_numpy().astype(int)]
+                sims = np.where(valid, sims, -np.inf)
+                kk = min(k, len(sims))
+                # keep every row >= the kk-th largest sim of this batch (not
+                # a bare argpartition: rounded sims tie, and dropping a tied
+                # lower id here could drop the global winner under the (sim
+                # desc, id asc) tie rule) — ties inflate the emit slightly
+                # past k, the global window rank cuts them exactly
+                thr = -np.partition(-sims, kk - 1, axis=0)[kk - 1]  # (Q,)
+                ri, qi = np.nonzero(valid & (sims >= thr[None, :]))
+                vid = pdf[id_col].to_numpy()
+                yield pd.DataFrame(
+                    {"query_id": qarr[qi], "vec_id": vid[ri], "cos_sim": sims[ri, qi]}
+                )
 
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, Qm = b.value
-        qarr = np.asarray(ids_b, dtype=object)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.maximum(norms, 1e-30)
-            sims = np.round(mat @ Qm.T, 6)  # (n, Q)
-            # a zero-norm corpus row scores -inf deterministically — if it
-            # produced NaN, a NaN landing at the kk-th position would make
-            # the threshold NaN and `sims >= thr` all-False, silently
-            # dropping every valid candidate of that batch (ADVICE r4)
-            sims[norms[:, 0] == 0.0] = -np.inf
-            n = sims.shape[0]
-            kk = min(k, n)
-            # keep every row >= the kk-th largest sim of this batch (not a
-            # bare argpartition: rounded sims tie, and dropping a tied lower
-            # id here could drop the global winner under the (sim desc, id
-            # asc) tie rule) — ties inflate the emit slightly past k, the
-            # global window rank cuts them exactly
-            thr = -np.partition(-sims, kk - 1, axis=0)[kk - 1]  # (Q,)
-            ri, qi = np.nonzero(sims >= thr[None, :])
-            vid = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "query_id": qarr[qi],
-                    "vec_id": vid[ri],
-                    "cos_sim": sims[ri, qi],
-                }
-            )
-
-    partial = embeddings.select(id_col, vec_col).mapInPandas(partial_topk, schema)
+        partial = cand.select(*cols).mapInPandas(partial_topk, schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
     )
@@ -344,8 +387,8 @@ def ivf_centroids(
         .orderBy(id_col)  # stable sample order -> deterministic k-means
         .collect()
     )
-    X = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in sample])
-    X = X / np.linalg.norm(X, axis=1, keepdims=True)
+    X, norms = _unit(np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in sample]))
+    X = X[norms > 0]  # a zero row has no direction; it would make a NaN centroid
     rng = np.random.default_rng(seed)
     k = min(n_clusters, len(X))
     C = X[rng.choice(len(X), k, replace=False)].copy()
@@ -370,9 +413,9 @@ def ivf_assign(
     """(id_col, cluster) — nearest-centroid (max cosine) assignment, one
     vectorized matmul per Arrow batch.  The id column keeps the caller's
     ``id_col`` name (ADVICE r3: it was hardcoded to 'vec_id', silently
-    renaming custom ids).  At production scale this output is written
-    bucketed/partitioned BY ``cluster`` so a probe prunes to ``nprobe``
-    partitions at scan time."""
+    renaming custom ids).  :func:`ivf_index_commit` writes it partitioned
+    BY ``cluster`` so a probe prunes to ``nprobe`` partitions at scan
+    time."""
     b = embeddings.sparkSession.sparkContext.broadcast(np.asarray(centroids))
     schema = T.StructType(
         [
@@ -384,8 +427,7 @@ def ivf_assign(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         C = b.value
         for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+            mat, _ = _unit(np.stack(pdf[vec_col].to_numpy()))
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -446,9 +488,7 @@ def semantic_dedup(
 
     def dedup_cluster(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(X, axis=1, keepdims=True)
-        Xn = X / np.maximum(norms, 1e-30)
+        Xn, _ = _unit(np.stack(pdf[vec_col].to_numpy()))
         s = len(Xn)
         keep = np.ones(s, dtype=bool)
         for i0 in range(0, s, block_rows):
@@ -470,92 +510,9 @@ def semantic_dedup(
     return joined.groupBy("cluster").applyInPandas(dedup_cluster, schema)
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_clusters: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: probe the ``nprobe`` centroids nearest the
-    query, exact-cosine rerank only their members (the brute scan touches
-    ``nprobe / n_clusters`` of the corpus).  ``nprobe == n_clusters`` is
-    EXACT (result-identical to :func:`cosine_topk` — the clusters partition
-    the corpus; the contract oracle checks this equality), smaller
-    ``nprobe`` trades recall for scan fraction (pytest asserts the recall
-    floor).
-
-    ``centroids``: a precomputed quantizer matrix (from
-    :func:`ivf_centroids` or :func:`ivf_write_index`) — repeated probes
-    against one corpus should pass it to skip the per-call k-means sample
-    collect + count (VERDICT r3 #4); the materialized-index pair
-    ``ivf_write_index``/``ivf_query_index`` is the persistent form."""
-    C = (
-        np.asarray(centroids)
-        if centroids is not None
-        else ivf_centroids(
-            embeddings, n_clusters, seed, id_col=id_col, vec_col=vec_col
-        )
-    )
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probe = np.argsort(-(C @ qn))[: min(nprobe, len(C))]
-    assigned = ivf_assign(embeddings, C, id_col, vec_col)
-    cand_ids = assigned.filter(
-        F.col("cluster").isin([int(c) for c in probe])
-    ).select(id_col)
-    cand = embeddings.join(cand_ids, id_col, "left_semi")
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
 # --------------------------------------------------------------------------
 # random-hyperplane LSH (scale path)
 # --------------------------------------------------------------------------
-
-
-def hyperplane_buckets(
-    embeddings: DataFrame,
-    dim: int,
-    n_planes: int = 12,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 1,
-) -> DataFrame:
-    """(id, table, bucket) — sign-bit buckets from seeded random hyperplanes,
-    one independent plane set per hash table (recall = 1-(1-p^k)^L).
-    Vectorized matmul per Arrow batch; plane matrices are closure
-    broadcasts."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, dim, n_planes))
-    spark = embeddings.sparkSession
-    b = spark.sparkContext.broadcast(planes)
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", embeddings.schema[id_col].dataType),
-            T.StructField("table", T.IntegerType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = b.value
-        weights = 1 << np.arange(p.shape[2], dtype=np.int64)
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            for t in range(p.shape[0]):
-                bits = (mat @ p[t]) > 0
-                buckets = (bits * weights).sum(axis=1)
-                yield pd.DataFrame(
-                    {"vec_id": pdf[id_col], "table": t, "bucket": buckets}
-                )
-
-    return embeddings.select(id_col, vec_col).mapInPandas(run, schema)
 
 
 def lsh_cosine_pairs(
@@ -624,7 +581,7 @@ def lsh_cosine_pairs(
     rows = wide.select(
         "vec_id", vec_d.alias("v"), _norm(vec_d).alias("n"), "bkts",
         F.posexplode("bkts").alias("table", "bucket"),
-    )
+    ).filter(F.col("n") > 0)  # a zero-norm row never pairs
     a = rows.select(
         F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
         F.col("n").alias("na"), F.col("bkts").alias("bkts_a"), "table", "bucket",
@@ -647,64 +604,6 @@ def lsh_cosine_pairs(
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-
-
-def ivf_write_index(
-    embeddings: DataFrame,
-    path: str,
-    n_clusters: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    files_per_cluster: int = 1,
-) -> np.ndarray:
-    """Materialize the IVF index: vectors written partitionBy(cluster), so a
-    probe reads ONLY its nprobe directories (partition pruning at scan
-    time — the 100-TB path: scan fraction = nprobe / n_clusters with zero
-    shuffle at query time).  Returns the centroid matrix (caller persists it
-    next to the index; it is the only query-time driver state).
-
-    The write shuffles on (cluster, salt) first so each cluster directory
-    holds at most ``files_per_cluster`` files — without it every upstream
-    task writes its own sliver into every directory (measured: 32
-    files/cluster at 32 shuffle partitions), and probe-time read
-    amplification scales with task count instead of data.  Raise
-    ``files_per_cluster`` when single-cluster row counts exceed one
-    task's comfortable write size."""
-    C = ivf_centroids(embeddings, n_clusters, seed, id_col=id_col, vec_col=vec_col)
-    assigned = ivf_assign(embeddings, C, id_col, vec_col)
-    rows = embeddings.join(assigned, id_col)
-    salt = F.pmod(
-        F.xxhash64(F.col(id_col).cast("string")), F.lit(max(files_per_cluster, 1))
-    )
-    (
-        rows.repartition(F.col("cluster"), salt)
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-    return C
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k against a written IVF index: the cluster filter is a partition
-    predicate (shows as PartitionFilters in the scan — pinned by test), so
-    non-probed clusters are never read."""
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    C = np.asarray(centroids)
-    probe = [int(c) for c in np.argsort(-(C @ qn))[: min(nprobe, len(C))]]
-    cand = spark.read.parquet(path).filter(F.col("cluster").isin(probe))
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def ivf_index_commit(
@@ -733,6 +632,11 @@ def ivf_index_commit(
     every snapshot keeps the cluster partition spec, so probe-time
     PartitionFilters pruning survives appends.  A per-commit lineage row
     lands in the metrics table.  Returns the centroid matrix.
+
+    The assigned rows shuffle on ``cluster`` before the write, so each
+    cluster directory of the first commit holds one file — without it every
+    upstream task writes its own sliver into every directory, and probe-time
+    read amplification scales with task count instead of data.
     """
     if catalog.exists(table):
         C = ivf_index_centroids(catalog, table)
@@ -741,7 +645,7 @@ def ivf_index_commit(
             embeddings, n_clusters, seed, id_col=id_col, vec_col=vec_col
         )
     assigned = ivf_assign(embeddings, C, id_col, vec_col)
-    rows = embeddings.join(assigned, id_col)
+    rows = embeddings.join(assigned, id_col).repartition("cluster")
     # partition-scoped MERGE is exact here: cluster = argmax(C @ vec) under
     # the FROZEN committed quantizer, so a re-delivered key always collides
     # inside the partition the delta touches — delta commits rewrite only
@@ -781,21 +685,22 @@ def ivf_query_catalog(
 ) -> DataFrame:
     """Top-k against the current snapshot of a catalog-committed IVF index:
     centroids come from the commit metadata, the cluster predicate prunes
-    partitions at scan time, and time travel falls out of the catalog
-    (pass ``snap`` to ``catalog.read`` for historical probes)."""
+    partitions at scan time (PartitionFilters), and the probed clusters are
+    reranked exactly by :func:`cosine_topk`.  ``nprobe == n_clusters`` is
+    EXACT (the clusters partition the corpus); smaller ``nprobe`` trades
+    recall for scan fraction."""
     C = ivf_index_centroids(catalog, table)
-    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probe = [int(c) for c in np.argsort(-(C @ qn))[: min(nprobe, len(C))]]
-    cand = catalog.read(spark, table).filter(F.col("cluster").isin(probe))
+    Q, _ = _unit(np.asarray([query_vec], dtype=np.float64))
+    probed = [int(c) for c in np.nonzero(_probe(C, Q, nprobe)[:, 0])[0]]
+    cand = catalog.read(spark, table).filter(F.col("cluster").isin(probed))
     return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
-def ivf_query_index_batch(
+def ivf_query_catalog_batch(
     spark,
-    path: str,
-    centroids: np.ndarray,
+    catalog,
     queries: DataFrame,
+    table: str = "ann_index",
     k: int = 10,
     nprobe: int = 4,
     id_col: str = "vec_id",
@@ -803,90 +708,14 @@ def ivf_query_index_batch(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Batch top-k against a written IVF index in ONE partition-pruned scan
-    (VERDICT r3 #3): per-query probe lists come from the (driver-resident)
-    centroid matrix, the scan reads only the UNION of probed clusters
-    (PartitionFilters prune the rest), and each corpus batch scores a row
-    only against the queries that probe its cluster — per query the result
-    is identical to :func:`ivf_query_index` (same probe rule, same
-    tie-break).  Output (query_id, rank, vec_id, cos_sim).
-    """
-    C = np.asarray(centroids)
-    rows = queries.select(query_id_col, query_vec_col).collect()
-    if not rows:
-        # derive vec_id's type from the index parquet, exactly like the
-        # non-empty path — a hardcoded LongType made the two branches
-        # schema-inconsistent for custom id columns (ADVICE r4)
-        empty = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[query_id_col].dataType),
-                T.StructField("rank", T.IntegerType(), False),
-                T.StructField(
-                    "vec_id", spark.read.parquet(path).schema[id_col].dataType
-                ),
-                T.StructField("cos_sim", T.DoubleType()),
-            ]
-        )
-        return spark.createDataFrame([], empty)
-    qids = [r[query_id_col] for r in rows]
-    Q = np.stack(
-        [np.asarray(r[query_vec_col], dtype=np.float64) for r in rows]
-    )
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-30)
-    npb = min(nprobe, len(C))
-    # (n_clusters, Q) probe mask + the union for the partition filter
-    order = np.argsort(-(Q @ C.T), axis=1)  # (Q, n_clusters)
-    probe_mask = np.zeros((len(C), len(qids)), dtype=bool)
-    for qi in range(len(qids)):
-        probe_mask[order[qi, :npb], qi] = True
-    union = sorted(int(c) for c in np.nonzero(probe_mask.any(axis=1))[0])
-    b = spark.sparkContext.broadcast((qids, Q, probe_mask))
-
-    cand = spark.read.parquet(path).filter(F.col("cluster").isin(union))
-    id_type = cand.schema[id_col].dataType
-    qid_type = queries.schema[query_id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type),
-            T.StructField("vec_id", id_type),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_b, Qm, pm = b.value
-        qarr = np.asarray(ids_b, dtype=object)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.maximum(norms, 1e-30)
-            sims = np.round(mat @ Qm.T, 6)  # (n, Q)
-            sims[norms[:, 0] == 0.0] = -np.inf  # see cosine_topk_batch
-            valid = pm[pdf["cluster"].to_numpy().astype(int)]  # (n, Q)
-            masked = np.where(valid, sims, -np.inf)
-            n = sims.shape[0]
-            kk = min(k, n)
-            thr = -np.partition(-masked, kk - 1, axis=0)[kk - 1]  # (Q,)
-            ri, qi = np.nonzero(valid & (masked >= thr[None, :]))
-            vid = pdf[id_col].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "query_id": qarr[qi],
-                    "vec_id": vid[ri],
-                    "cos_sim": sims[ri, qi],
-                }
-            )
-
-    partial = cand.select(id_col, vec_col, "cluster").mapInPandas(
-        partial_topk, schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos_sim")
+    """Batch top-k against a catalog-committed IVF index in ONE
+    partition-pruned scan: the scan reads only the UNION of probed clusters,
+    and each corpus batch scores a row only against the queries that probe
+    its cluster — per query the result is identical to
+    :func:`ivf_query_catalog` (same probe rule, same tie-break).  Output
+    (query_id, rank, vec_id, cos_sim)."""
+    return _batch_topk(
+        catalog.read(spark, table), queries, k, id_col, vec_col,
+        query_id_col, query_vec_col,
+        centroids=ivf_index_centroids(catalog, table), nprobe=nprobe,
     )

@@ -3,11 +3,12 @@ companion to llm_scaling_bench.py (VERDICT r4 next-steps #4 covers the
 dedup AND similarity suites).
 
 Job: 10x the sf0.1 embeddings table (20,000 x 64-d; copies are slightly
-rotated so clusters stay non-degenerate), write the IVF index partitioned
-by cluster (16 clusters), then serve a 64-query batch probe at nprobe=4
-through ONE partition-pruned scan (`ivf_query_index_batch`).  Reported:
+rotated so clusters stay non-degenerate), commit the IVF index to a
+snapshot catalog partitioned by cluster (16 clusters, `ivf_index_commit`),
+then serve a 64-query batch probe at nprobe=4 through ONE partition-pruned
+scan (`ivf_query_catalog_batch`).  Reported:
 
-* index-build wall (k-means sample + assign + partitionBy write),
+* index-build wall (k-means sample + assign + partitioned commit),
 * batch-probe wall and queries/s at local[2] vs local[8],
 * pruning evidence: files in the probed cluster partitions vs total
   (the scan's PartitionFilters keeps the ratio sub-linear in nprobe).
@@ -37,6 +38,7 @@ def ident(b):
 spark.range(0, cpus * 4, 1, cpus * 4).mapInPandas(ident, "id long").count()
 
 from pyspark.sql import functions as F
+from geetiles_spark.catalog import Catalog
 from geetiles_spark.operators import similarity
 
 base = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
@@ -57,9 +59,9 @@ for c in copies[1:]:
 corpus = corpus.repartition(32).cache()
 n = corpus.count()
 
-path = tempfile.mkdtemp(prefix=f"ann_scale_{cpus}_") + "/index"
+cat = Catalog(tempfile.mkdtemp(prefix=f"ann_scale_{cpus}_"))
 t0 = time.time()
-C = similarity.ivf_write_index(corpus, path, n_clusters=16)
+C = similarity.ivf_index_commit(spark, cat, corpus, n_clusters=16)
 t_build = time.time() - t0
 
 queries = corpus.filter(F.col("vec_id") % 311 == 0).limit(64).select(
@@ -68,27 +70,24 @@ queries = corpus.filter(F.col("vec_id") % 311 == 0).limit(64).select(
 nq = queries.count()
 
 # warm probe then timed probe
-similarity.ivf_query_index_batch(spark, path, C, queries.limit(4), k=10, nprobe=4).count()
+similarity.ivf_query_catalog_batch(spark, cat, queries.limit(4), k=10, nprobe=4).count()
 t0 = time.time()
-out = similarity.ivf_query_index_batch(spark, path, C, queries, k=10, nprobe=4)
+out = similarity.ivf_query_catalog_batch(spark, cat, queries, k=10, nprobe=4)
 rows = out.count()
 t_probe = time.time() - t0
 
-total_files = len(glob.glob(path + "/cluster=*/*.parquet"))
+total_files = len(glob.glob(cat.snapshot_path("ann_index") + "/cluster=*/*.parquet"))
 # pruning evidence: union of probed clusters for batch sizes 1/4/64 — a
 # single query reads nprobe/n_clusters of the index; a diverse batch's
 # union grows toward full coverage (inherent to union-pruned batching)
 qv = np.stack([np.asarray(r["query_vec"], dtype=np.float64) for r in queries.collect()])
-qv = qv / np.linalg.norm(qv, axis=1, keepdims=True)
-order = np.argsort(-(qv @ np.asarray(C).T), axis=1)[:, :4]
-probed = {
-    bs: sorted(set(int(c) for c in order[:bs].ravel())) for bs in (1, 4, 64)
-}
+mask = similarity._probe(C, qv, 4)  # (n_clusters, n_queries), the probe rule
+probed = {bs: int(mask[:, :bs].any(axis=1).sum()) for bs in (1, 4, 64)}
 print("RESULT " + json.dumps({
     "cpus": cpus, "n_vectors": n, "n_queries": nq, "result_rows": rows,
     "t_index_build": round(t_build, 2), "t_batch_probe": round(t_probe, 2),
     "queries_per_sec": round(nq / t_probe, 1),
-    "probed_clusters_by_batch": {k: len(v) for k, v in probed.items()},
+    "probed_clusters_by_batch": probed,
     "n_clusters": 16,
     "files_total": total_files,
 }))

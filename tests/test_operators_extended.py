@@ -400,12 +400,6 @@ class TestSimilarityScalePath:
         }
         assert one == many and len(one) > 0
 
-    def test_hyperplane_buckets_deterministic(self, spark):
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        b1 = {r["vec_id"]: r["bucket"] for r in similarity.hyperplane_buckets(emb, 64).collect()}
-        b2 = {r["vec_id"]: r["bucket"] for r in similarity.hyperplane_buckets(emb, 64).collect()}
-        assert b1 == b2
-
 
 class TestLongTailParity:
     def test_monthly_name_parsing(self):
@@ -671,16 +665,25 @@ class TestDistributedKatana:
         assert got2 == {(r["aoi_id"], r["row_idx"], r["tile_id"]) for r in got}
 
 
+def _ivf_index(spark, tmp_path, emb, n_clusters=8):
+    """Commit ``emb`` as a catalog IVF index; returns (catalog, centroids)."""
+    from geetiles_spark.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "cat"))
+    return cat, similarity.ivf_index_commit(spark, cat, emb, n_clusters=n_clusters)
+
+
 class TestIVF:
-    def test_full_probe_equals_brute(self, spark):
+    def test_full_probe_equals_brute(self, spark, tmp_path):
         """nprobe == n_clusters covers the whole corpus partition, so IVF
         must reproduce the brute top-k exactly."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         q = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+        cat, _ = _ivf_index(spark, tmp_path, emb)
         brute = [(r["rank"], r["vec_id"], r["cos_sim"])
                  for r in similarity.cosine_topk(emb, q, k=10).collect()]
         ivf = [(r["rank"], r["vec_id"], r["cos_sim"])
-               for r in similarity.ivf_topk(emb, q, k=10, n_clusters=8, nprobe=8).collect()]
+               for r in similarity.ivf_query_catalog(spark, cat, q, k=10, nprobe=8).collect()]
         assert ivf == brute
 
     def test_assignment_partitions_corpus(self, spark):
@@ -693,14 +696,15 @@ class TestIVF:
         assert a1 == a2 and len(a1) == emb.count()
         assert len(set(a1.values())) > 1  # quantizer actually splits
 
-    def test_partial_probe_recall(self, spark):
+    def test_partial_probe_recall(self, spark, tmp_path):
         """nprobe < n_clusters scans a fraction of the corpus; top-k recall
         stays high because near neighbors share the query's clusters."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         q = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+        cat, _ = _ivf_index(spark, tmp_path, emb)
         brute = {r["vec_id"] for r in similarity.cosine_topk(emb, q, k=10).collect()}
         got = {r["vec_id"]
-               for r in similarity.ivf_topk(emb, q, k=10, n_clusters=8, nprobe=3).collect()}
+               for r in similarity.ivf_query_catalog(spark, cat, q, k=10, nprobe=3).collect()}
         assert len(got & brute) / len(brute) >= 0.7
 
 
@@ -987,62 +991,71 @@ class TestConnectedComponents:
 
 class TestIVFIndex:
     def test_partition_pruned_probe(self, spark, tmp_path):
-        """The written IVF index prunes non-probed clusters at SCAN time
-        (PartitionFilters carry the cluster predicate), and full-probe
-        results equal brute top-k."""
+        """The catalog IVF index prunes non-probed clusters at SCAN time
+        (PartitionFilters carry the cluster predicate), full-probe results
+        equal brute top-k, and the first commit writes one file per
+        cluster directory."""
+        import glob
+
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         q = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-        path = str(tmp_path / "ivf")
-        C = similarity.ivf_write_index(emb, path, n_clusters=8)
-        out = similarity.ivf_query_index(spark, path, C, q, k=10, nprobe=2)
+        # four upstream tasks: without the commit's cluster shuffle each one
+        # writes its own file into every cluster directory
+        cat, _ = _ivf_index(spark, tmp_path, emb.repartition(4))
+        out = similarity.ivf_query_catalog(spark, cat, q, k=10, nprobe=2)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan
         frag = plan.split("PartitionFilters")[1][:120]
         assert "cluster" in frag  # pruning predicate reached the scan
         # full probe == brute
-        full = similarity.ivf_query_index(spark, path, C, q, k=10, nprobe=8)
+        full = similarity.ivf_query_catalog(spark, cat, q, k=10, nprobe=8)
         brute = [(r["rank"], r["vec_id"]) for r in similarity.cosine_topk(emb, q, 10).collect()]
         assert [(r["rank"], r["vec_id"]) for r in full.collect()] == brute
-        # partial probe scanned a strict subset of files
-        import glob
-        assert len(glob.glob(path + "/cluster=*")) == 8
+        dirs = glob.glob(cat.snapshot_path("ann_index") + "/cluster=*")
+        assert len(dirs) == 8
+        assert all(len(glob.glob(d + "/*.parquet")) == 1 for d in dirs)
 
     def test_batch_probe_matches_per_query(self, spark, tmp_path):
-        """ivf_query_index_batch at partial nprobe must equal a loop of
+        """ivf_query_catalog_batch at partial nprobe must equal a loop of
         single-query probes (same probe rule + tie-break), in ONE
         partition-pruned scan."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        path = str(tmp_path / "ivf_b")
-        C = similarity.ivf_write_index(emb, path, n_clusters=8)
+        cat, _ = _ivf_index(spark, tmp_path, emb)
         qrows = emb.filter(F.col("vec_id").isin([0, 3, 11])).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
+        batch = similarity.ivf_query_catalog_batch(spark, cat, qrows, k=5, nprobe=2)
+        plan = batch._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Scan parquet") == 1
+        assert "cluster" in plan.split("PartitionFilters")[1][:120]
         got = {
             (r["query_id"], r["rank"], r["vec_id"], r["cos_sim"])
-            for r in similarity.ivf_query_index_batch(
-                spark, path, C, qrows, k=5, nprobe=2
-            ).collect()
+            for r in batch.collect()
         }
         expect = set()
         for r in qrows.collect():
-            single = similarity.ivf_query_index(
-                spark, path, C, [float(x) for x in r["query_vec"]], k=5, nprobe=2
+            single = similarity.ivf_query_catalog(
+                spark, cat, [float(x) for x in r["query_vec"]], k=5, nprobe=2
             )
             for s in single.collect():
                 expect.add((r["query_id"], s["rank"], s["vec_id"], s["cos_sim"]))
         assert got == expect and len(got) == 15
 
-    def test_ivf_topk_precomputed_centroids(self, spark):
-        """Passing a precomputed centroid matrix must skip the k-means
-        sample collect and give identical results (VERDICT r3 #4)."""
+    def test_ivf_topk_precomputed_centroids(self, spark, tmp_path):
+        """Probes run off the precomputed centroid matrix stored in the
+        commit metadata — no per-probe k-means sample collect (VERDICT r3
+        #4): it round-trips exactly, and a probe after the commit equals
+        the brute top-k."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         q = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-        C = similarity.ivf_centroids(emb, n_clusters=8)
-        a = [(r["rank"], r["vec_id"]) for r in similarity.ivf_topk(
-            emb, q, k=10, n_clusters=8, nprobe=8).collect()]
-        b = [(r["rank"], r["vec_id"]) for r in similarity.ivf_topk(
-            emb, q, k=10, n_clusters=8, nprobe=8, centroids=C).collect()]
+        cat, C = _ivf_index(spark, tmp_path, emb)
+        assert np.array_equal(similarity.ivf_index_centroids(cat), C)
+        assert np.array_equal(C, similarity.ivf_centroids(emb, n_clusters=8))
+        a = [(r["rank"], r["vec_id"]) for r in similarity.ivf_query_catalog(
+            spark, cat, q, k=10, nprobe=8).collect()]
+        b = [(r["rank"], r["vec_id"]) for r in similarity.cosine_topk(
+            emb, q, k=10).collect()]
         assert a == b
 
     def test_catalog_incremental_index(self, spark, tmp_path):

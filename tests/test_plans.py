@@ -5,7 +5,10 @@ plans survive a 100x scale-up, asserted over the real contract queries.
 - no BroadcastNestedLoopJoin except a one-row scalar attach (vocab_topk):
   every tile-vs-footprint join is one broadcast cell equi-join;
 - relational scans push their filters into the parquet reader and prune
-  columns (q1 must not read l_comment).
+  columns (q1 must not read l_comment);
+- embedding search: the single-query top-k has no Python node, the batch
+  IVF probe is one cluster-pruned Python stage, and the block pairs pack
+  once and never broadcast the packed matrices.
 """
 
 from __future__ import annotations
@@ -70,6 +73,48 @@ class TestPlanShapes:
                     plan.count("Exchange"),
                 )
                 assert got == pinned[name], (name, got)
+
+    def test_embedding_topk_runs_in_the_jvm(self, spark):
+        import re
+
+        plan = _plan(spark, "embedding_topk")
+        assert not re.search(r"EvalPython|InPandas|InArrow", plan)
+
+    def test_ivf_batch_probe_is_one_pruned_python_stage(self, spark):
+        import re
+
+        plan = _plan(spark, "embedding_ivf_topk_batch")
+        assert len(re.findall(r"\bMapInPandas\b", plan)) == 1
+        assert "cluster" in plan.split("PartitionFilters")[1][:120]
+
+    def test_cosine_pairs_packs_once_and_never_broadcasts_blocks(self, spark):
+        """The block pack is one FlatMapGroupsInPandas node (persisted: the
+        cached plan prints under both join-side scans but runs once), and no
+        BroadcastExchange subtree carries the packed matrices."""
+        import re
+
+        from geetiles_spark import cache
+        from geetiles_spark.operators import similarity
+
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+        with cache.persist_scope():
+            plan = (
+                similarity.cosine_pairs(emb, 0.35, block_rows=17)
+                ._jdf.queryExecution().executedPlan().toString()
+            )
+        assert len(set(re.findall(r"FlatMapGroupsInPandas .*", plan))) == 1
+        lines = plan.splitlines()
+        for i, line in enumerate(lines):
+            if "BroadcastExchange" not in line:
+                continue
+            depth = line.index("BroadcastExchange")
+            subtree = [line]
+            for nxt in lines[i + 1:]:
+                node = re.search(r"[A-Za-z]", nxt)
+                if node is None or node.start() <= depth:
+                    break
+                subtree.append(nxt)
+            assert not re.search(r"\bmat(_[ab])?#", "\n".join(subtree)), subtree
 
     def test_q1_pushdown_and_pruning(self, spark):
         plan = _plan(spark, "q1_pricing_summary")

@@ -40,6 +40,7 @@ class TestZeroNormEmbeddings:
         assert all(r.cos_sim == 0.0 for r in got)
 
     def test_ivf_batch_zero_vector_in_index(self, spark, tmp_path):
+        from geetiles_spark.catalog import Catalog
         from geetiles_spark.operators import similarity
 
         rows = [
@@ -47,13 +48,13 @@ class TestZeroNormEmbeddings:
             for i in range(20)
         ] + [(99, [0.0, 0.0])]
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        path = str(tmp_path / "idx")
-        C = similarity.ivf_write_index(emb, path, n_clusters=3)
+        cat = Catalog(str(tmp_path / "cat"))
+        similarity.ivf_index_commit(spark, cat, emb, n_clusters=3)
         qs = spark.createDataFrame(
             [(0, [1.0, 0.0])], "query_id long, query_vec array<double>"
         )
-        got = similarity.ivf_query_index_batch(
-            spark, path, C, qs, k=5, nprobe=3
+        got = similarity.ivf_query_catalog_batch(
+            spark, cat, qs, k=5, nprobe=3
         ).collect()
         assert len(got) == 5
         assert 99 not in [r.vec_id for r in got]
@@ -62,7 +63,8 @@ class TestZeroNormEmbeddings:
 class TestIvfBatchEmptySchema:
     def test_empty_and_nonempty_schemas_match_for_string_ids(self, spark, tmp_path):
         """Empty-queries branch hardcoded vec_id LongType while the
-        non-empty path derives it from the index parquet (ADVICE r4)."""
+        non-empty path derives it from the index table (ADVICE r4)."""
+        from geetiles_spark.catalog import Catalog
         from geetiles_spark.operators import similarity
 
         emb = spark.createDataFrame(
@@ -72,15 +74,15 @@ class TestIvfBatchEmptySchema:
             ],
             "vec_id string, embedding array<double>",
         )
-        path = str(tmp_path / "idx")
-        C = similarity.ivf_write_index(emb, path, n_clusters=2)
+        cat = Catalog(str(tmp_path / "cat"))
+        similarity.ivf_index_commit(spark, cat, emb, n_clusters=2)
         qschema = "query_id long, query_vec array<double>"
-        nonempty = similarity.ivf_query_index_batch(
-            spark, path, C,
+        nonempty = similarity.ivf_query_catalog_batch(
+            spark, cat,
             spark.createDataFrame([(1, [1.0, 0.0])], qschema), k=3, nprobe=2,
         )
-        empty = similarity.ivf_query_index_batch(
-            spark, path, C, spark.createDataFrame([], qschema), k=3, nprobe=2,
+        empty = similarity.ivf_query_catalog_batch(
+            spark, cat, spark.createDataFrame([], qschema), k=3, nprobe=2,
         )
         assert empty.schema == nonempty.schema
         assert empty.count() == 0
