@@ -17,28 +17,22 @@ Operators:
                                similarity.py for the LSH-bucketed scale path)
 
 Scale notes: every pair operator is a keyed self-join (gram, band key or
-signature segment), and a key shared by D rows emits ~D^2/2 pairs inside
-one join task.  AQE's skew-join splitting does not bound that: it fires on
-partition BYTES (256 MB by default), while a key of a few thousand rows
-is small in bytes and quadratic in pairs.  :func:`_keyed_self_join` owns
-the fix once for all four pair operators — an exact probe of the per-key
-row counts and a salted join for the keys above ``HOT_KEY_THRESHOLD``.
-Per-doc dedup (``array_distinct`` before the explode) keeps a doc's
-repeated grams from multiplying its rows.
+signature segment) through :func:`.pairs.keyed_self_join`, which salts
+the keys above ``HOT_KEY_THRESHOLD`` inside the plan, so a hot key never
+becomes one quadratic join task.  No pair operator runs a Spark action of
+its own (the one exception: LSH's ``encode_ids`` injectivity check); the
+caller's action runs the whole plan.  Per-doc dedup (``array_distinct``
+before the explode) keeps a doc's repeated grams from multiplying its rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import cache
+from .pairs import HOT_KEY_THRESHOLD, N_SALTS, keyed_self_join
 from .partitioning import spread
-
-# keys shared by more rows than this take the salted self-join, spread over
-# N_SALTS tasks (sizing rule on :func:`_keyed_self_join`)
-HOT_KEY_THRESHOLD = 1024
-N_SALTS = 16
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -144,59 +138,6 @@ def minhash_signatures(
     )
 
 
-def _keyed_self_join(
-    rows: DataFrame, keys: list[str], id_col: str, hot_threshold: int, n_salts: int, pair
-) -> tuple[DataFrame, Row]:
-    """The skew-safe keyed self-join every pair operator runs: ``(pairs,
-    est)`` where ``pairs = pair(a_rows, b_rows, join_keys)`` over all of
-    ``rows`` and ``est`` is the probe row ``(s2, max_df)``.
-
-    ``pair`` projects the two sides, joins them on ``join_keys`` and runs
-    every filter that must stay inside the join granule (report-once,
-    length filter, packed key).  ``join_keys`` is ``keys`` on the plain
-    path and ``keys + ["salt"]`` on the salted one; ``salt`` is dropped
-    from its output.  ``rows`` is read by the probe and by the join, so the
-    caller persists it.
-
-    Probe: the per-key row counts ``df`` are persisted and ONE action reads
-    ``sum(df^2)`` and ``max(df)``.  ``s2`` is the exact ordered join-row
-    count (the quantity *Random Sampling Over Spatial Range Joins*, ICDE
-    2025, samples), so a caller can size its pair aggregation from it.
-
-    Pay-as-you-go: when no key holds more than ``hot_threshold`` rows (the
-    clean-corpus case) the plan is the plain equi-join, with no anti, semi
-    or salt stages.  Otherwise the hot keys — few by definition, so
-    broadcast — split the rows: cold keys take the plain join, hot keys a
-    SALTED join on ``keys + [salt]`` where side a carries ``salt =
-    xxhash64(id) % n_salts`` and side b is replicated to every salt.  Each
-    ``(key, a, b)`` still meets exactly once (a's salt is a function of its
-    id), so the pairs are identical to the plain join's, while a key of D
-    rows emits ~D^2/n_salts pairs per task instead of ~D^2/2 in one.
-
-    Sizing on skewed corpora (measured, BENCH/LLM_SCALING.md): a cold key
-    just under ``hot_threshold`` emits ~df^2/2 pairs in one join granule,
-    a salted hot key ~df^2/n_salts per granule — so bound the per-task pair
-    emission with ``hot_threshold ~ sqrt(2 x target_pairs_per_task)`` and
-    ``n_salts ~ max_expected_df / hot_threshold``.  With the defaults
-    (1024, 16) a near-threshold granule is ~0.5M pairs; sizing LSH to (256,
-    64) on a mega-cluster corpus took the largest partition's share of
-    emitted pairs from 0.34 to 0.035.
-    """
-    df = cache.track(rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("df")))
-    est = df.agg(
-        F.sum(F.col("df") * F.col("df")).alias("s2"), F.max("df").alias("max_df")
-    ).first()
-    if est["max_df"] is None or int(est["max_df"]) <= hot_threshold:
-        return pair(rows, rows, keys), est
-    hot = F.broadcast(df.filter(F.col("df") > hot_threshold).select(*keys))
-    cold = rows.join(hot, keys, "left_anti")
-    hot_rows = rows.join(hot, keys, "left_semi")
-    a = hot_rows.withColumn("salt", F.pmod(F.xxhash64(id_col), F.lit(n_salts)).cast("int"))
-    b = hot_rows.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    hot_pairs = pair(a, b, keys + ["salt"]).drop("salt")
-    return pair(cold, cold, keys).unionByName(hot_pairs), est
-
-
 def lsh_candidate_pairs(
     docs: DataFrame,
     shingle_n: int = 5,
@@ -239,9 +180,9 @@ def lsh_candidate_pairs(
       ORIGINAL ids (least/greatest after decode).  Long-id corpora skip
       this (already minimal).
 
-    Hot bkey buckets — giant exact-dup clusters — take the salted path of
-    :func:`_keyed_self_join` (``hot_bucket_size``, ``n_salts``), which also
-    gives the sizing rule for skewed corpora.
+    Hot bkey buckets — giant exact-dup clusters — are salted by
+    :func:`.pairs.keyed_self_join` (``hot_bucket_size``, ``n_salts``),
+    which also gives the sizing rule for skewed corpora.
     """
     rows_per_band = num_hashes // bands
     # the shingle+md5 map stage does ~300x the scan's work; a starved scan
@@ -321,7 +262,7 @@ def lsh_candidate_pairs(
             F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"), "band", *keys
         ).join(b.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"), *keys), keys)
 
-    cand, _ = _keyed_self_join(band_rows, ["bkey"], "doc_id", hot_bucket_size, n_salts, pair)
+    cand = keyed_self_join(band_rows, ["bkey"], "doc_id", hot_bucket_size, n_salts, pair)
 
     def slice_eq(b: int):
         eq = F.col("sig_a")[b * rows_per_band] == F.col("sig_b")[b * rows_per_band]
@@ -452,7 +393,7 @@ def simhash_hamming_pairs(
 
     (seg, segv) buckets holding more than ``hot_bucket_size`` docs
     (boilerplate-heavy corpora collapse many docs onto popular segment
-    values) take the salted path of :func:`_keyed_self_join`.
+    values) are salted by :func:`.pairs.keyed_self_join`.
     """
     sig = simhash_signatures(docs, id_col, text_col)
     segs = simhash_segments(max_dist)
@@ -463,7 +404,7 @@ def simhash_hamming_pairs(
             F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"), *keys
         ).join(b.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sb"), *keys), keys)
 
-    cand, _ = _keyed_self_join(seg_rows, ["seg", "segv"], "doc_id", hot_bucket_size, n_salts, pair)
+    cand = keyed_self_join(seg_rows, ["seg", "segv"], "doc_id", hot_bucket_size, n_salts, pair)
     ham = sum(
         F.when(
             F.substring("sa", j + 1, 1) != F.substring("sb", j + 1, 1), 1
@@ -511,22 +452,27 @@ def ngram_jaccard_pairs(
 
     Skew hardening (VERDICT r2 #6), still EXACT: a gram occurring in D docs
     produces D^2/2 join rows in one hash-partition task.  Grams with doc
-    frequency > ``hot_doc_freq`` take the salted path of
-    :func:`_keyed_self_join`; the total work is inherent to exact
-    intersection counting, the salt spreads it.  Its probe's ``sum(df^2)``
-    sizes the pair aggregation.
+    frequency > ``hot_doc_freq`` are salted by
+    :func:`.pairs.keyed_self_join`; the total work is inherent to exact
+    intersection counting, the salt spreads it.
 
-    Two further EXACT prunes on the pair pipeline (round 7):
+    The pair pipeline carries what the score needs, so the operator runs
+    no action of its own:
 
-    - length filter (:func:`_length_filter`): the join drops size-mismatched
-      pairs BEFORE the pair exchange (the query's largest shuffle).  The
-      per-doc gram count rides on each gram row, computed pre-explode at
-      zero extra shuffle cost.
-    - packed pair key: when ids are provably non-negative ints < 2^31, the
-      (doc_a, doc_b) pair travels the exchange as ONE long and the pair agg
-      groups on a single 8-byte key; unpacked (and cast back to the input
-      dtype) only after the n_inter floor filter.  Generic ids keep the
-      two-column path.
+    - every gram row holds ``ng``, its doc's distinct-gram count, computed
+      pre-explode at zero extra shuffle cost.  The join's exact length
+      filter (:func:`_length_filter`) reads it on both sides and drops
+      size-mismatched pairs BEFORE the pair exchange (the query's largest
+      shuffle), and each pair row carries it on as ``(na, nb)``;
+    - the pair aggregation counts ``|A∩B|`` and takes ``max(na)``,
+      ``max(nb)`` (constant per pair), so the Jaccard is computed in place,
+      with no per-doc size table and no size-attach joins.
+
+    The pair aggregation's exchange is the default ``repartition(doc_a,
+    doc_b)``: ``spark.sql.shuffle.partitions`` tasks that AQE coalesces,
+    like every other shuffle in the engine.  This is deliberate: sizing it
+    from an exact join-size probe (``sum(df^2)``) cost an action of its
+    own on every call.
     """
     grams = (
         spread(docs.select(F.col(id_col), F.col(text_col)), key=id_col)
@@ -566,54 +512,25 @@ def ngram_jaccard_pairs(
         .select("doc_id", "ng", F.xxhash64("gram_s").alias("gram"))
     )
     grams = cache.track(grams)
-    sizes = cache.track(
-        grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    )
-    # one dim-sized action on the persisted per-doc size table serves BOTH
-    # the exact min-size floor below AND (for integral ids) the packed-key
-    # bounds — the id range decides whether a pair can ride in ONE long
     t = float(threshold)
-    id_dtype = grams.schema["doc_id"].dataType.simpleString()
-    if id_dtype in ("tinyint", "smallint", "int", "bigint"):
-        srow = sizes.agg(
-            F.min("n_grams").alias("mg"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-        ).first()
-        lo, hi = srow["lo"], srow["hi"]
-    else:
-        srow = sizes.agg(F.min("n_grams").alias("mg")).first()
-        lo, hi = None, None
-    min_grams = srow["mg"] if srow is not None else None
-    # pack (doc_a, doc_b) into one long when ids provably fit in 32 bits:
-    # the pair exchange below is the query's largest shuffle, and one
-    # 8-byte key halves its payload vs two id columns (guide §2.3 narrower
-    # types) while the pair-agg compares a single long.  Injective by the
-    # range check, and the unpack below restores the original ids/dtype
-    # bit-for-bit; any other id type takes the generic two-column path.
-    use_packed = lo is not None and int(lo) >= 0 and int(hi) < (1 << 31)
 
     def pair_rows(a_side: DataFrame, b_side: DataFrame, keys: list) -> DataFrame:
         a, b = a_side.alias("a"), b_side.alias("b")
-        j = a.join(b, on=keys).filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & _length_filter(F.col("a.ng"), F.col("b.ng"), t)
-        )
-        if use_packed:
-            return j.select(
-                (
-                    F.col("a.doc_id").cast("long") * F.lit(1 << 32)
-                    + F.col("b.doc_id").cast("long")
-                ).alias("pk")
+        return (
+            a.join(b, on=keys)
+            .filter(
+                (F.col("a.doc_id") < F.col("b.doc_id"))
+                & _length_filter(F.col("a.ng"), F.col("b.ng"), t)
             )
-        return j.select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            .select(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.col("a.ng").alias("na"),
+                F.col("b.ng").alias("nb"),
+            )
         )
 
-    # the probe's sum(df^2) IS the ordered join-row count, so the pair-agg
-    # partition count below derives from the data, not a constant
-    all_pairs, est = _keyed_self_join(grams, ["gram"], "doc_id", hot_doc_freq, n_salts, pair_rows)
-    est_pair_rows = int(est["s2"] or 0) // 2
+    all_pairs = keyed_self_join(grams, ["gram"], "doc_id", hot_doc_freq, n_salts, pair_rows)
     # pair-count aggregation: an explicit repartition on the pair key turns
     # the groupBy into ONE complete HashAggregate instead of partial+final.
     # Partial aggregation is structurally useless here — a pair's duplicate
@@ -621,43 +538,15 @@ def ngram_jaccard_pairs(
     # same map partition is ~1/partitions regardless of corpus duplication
     # — yet it would probe a hash map with every one of the O(sum df^2)
     # join rows (measured 16s -> 6.5s on a 114M-pair stream at local[32],
-    # and far lower variance).  The partition count derives from the
-    # measured join volume (sum(df^2)/2 rows, ~16 B each, ~48 MB per agg
-    # task — a conservative over-estimate now that the length filter prunes
-    # before the exchange) so per-task agg maps stay on the codegen fast
-    # path at ANY scale factor — floored at 2x parallelism.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    n_agg_parts = max(2 * par, (est_pair_rows * 16) // (48 << 20) + 1)
-    if use_packed:
-        inter = (
-            all_pairs.repartition(n_agg_parts, "pk")
-            .groupBy("pk")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    else:
-        inter = (
-            all_pairs.repartition(n_agg_parts, "doc_a", "doc_b")
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    # EXACT pre-filter from the global minimum doc size (the srow action
-    # above): jaccard >= t requires n_inter >= t*(na+nb)/(1+t) >=
-    # t*2*min_size/(1+t), so pairs below the relaxed floor can never pass —
-    # on noise-dominated corpora this cuts the two size-attach join probes
-    # from O(all candidate pairs) to O(qualifying pairs) while provably
-    # changing nothing.
-    if min_grams is not None:
-        need = int((threshold * 2 * int(min_grams)) / (1.0 + threshold))
-        inter = inter.filter(F.col("n_inter") >= F.lit(need))
-    if use_packed:
-        inter = inter.select(
-            F.shiftright("pk", 32).cast(id_dtype).alias("doc_a"),
-            F.col("pk").bitwiseAND(F.lit((1 << 32) - 1)).cast(id_dtype).alias("doc_b"),
-            "n_inter",
-        )
+    # and far lower variance).
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_grams", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_grams", "nb"), "doc_b")
+        all_pairs.repartition("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.count(F.lit(1)).alias("n_inter"),
+            F.max("na").alias("na"),
+            F.max("nb").alias("nb"),
+        )
         .withColumn(
             "jaccard",
             F.round(
@@ -1115,8 +1004,8 @@ def dhash_hamming_pairs(
     the two 32-bit halves (pure JVM long ops — not 64 per-char
     comparisons), and keep each pair only in its FIRST agreeing segment
     (report-once: a filter, never a distinct shuffle).  A hot segment
-    value (e.g. many near-black thumbnails) takes the salted path of
-    :func:`_keyed_self_join` at the module defaults ``HOT_KEY_THRESHOLD``
+    value (e.g. many near-black thumbnails) is salted by
+    :func:`.pairs.keyed_self_join` at this module's ``HOT_KEY_THRESHOLD``
     and ``N_SALTS``, so it never becomes one quadratic task."""
     segs = simhash_segments(max_dist, sig_len=64)
     seg_rows = cache.track(
@@ -1137,7 +1026,7 @@ def dhash_hamming_pairs(
             keys,
         )
 
-    pairs, _ = _keyed_self_join(seg_rows, ["seg", "segv"], "iid", HOT_KEY_THRESHOLD, N_SALTS, pair)
+    pairs = keyed_self_join(seg_rows, ["seg", "segv"], "iid", HOT_KEY_THRESHOLD, N_SALTS, pair)
     dist = F.bit_count(
         F.col("hi_a").bitwiseXOR(F.col("hi_b"))
     ) + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))

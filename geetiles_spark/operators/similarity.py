@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geetiles_spark import cache
+from .pairs import HOT_KEY_THRESHOLD, N_SALTS, keyed_self_join
 
 
 def _dot(a, b):
@@ -539,6 +540,11 @@ def lsh_cosine_pairs(
     kept only in the FIRST table where the two arrays agree.  No terminal
     ``distinct()``: at 10^9-vector candidate volumes that distinct was the
     stage's dominant shuffle.
+
+    A hot bucket (many near-parallel vectors) is salted by
+    :func:`.pairs.keyed_self_join` at this module's ``HOT_KEY_THRESHOLD``
+    and ``N_SALTS``, so it never becomes one quadratic task; salting never
+    changes the ``(table, bucket)`` a pair meets in, so report-once holds.
     """
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_tables, dim, n_planes))
@@ -578,18 +584,27 @@ def lsh_cosine_pairs(
 
     wide = embeddings.select(id_col, vec_col).mapInPandas(bucketize, wide_schema)
     vec_d = F.transform(F.col("emb"), lambda x: x.cast("double"))
-    rows = wide.select(
-        "vec_id", vec_d.alias("v"), _norm(vec_d).alias("n"), "bkts",
-        F.posexplode("bkts").alias("table", "bucket"),
-    ).filter(F.col("n") > 0)  # a zero-norm row never pairs
-    a = rows.select(
-        F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
-        F.col("n").alias("na"), F.col("bkts").alias("bkts_a"), "table", "bucket",
+    # persist: the per-bucket count and the pair join both read the rows
+    rows = cache.track(
+        wide.select(
+            "vec_id", vec_d.alias("v"), _norm(vec_d).alias("n"), "bkts",
+            F.posexplode("bkts").alias("table", "bucket"),
+        ).filter(F.col("n") > 0)  # a zero-norm row never pairs
     )
-    b = rows.select(
-        F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("n").alias("nb"), F.col("bkts").alias("bkts_b"), "table", "bucket",
-    )
+
+    def pair(a, b, keys):
+        return a.select(
+            F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
+            F.col("n").alias("na"), F.col("bkts").alias("bkts_a"), *keys,
+        ).join(
+            b.select(
+                F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
+                F.col("n").alias("nb"), F.col("bkts").alias("bkts_b"), *keys,
+            ),
+            keys,
+        )
+
+    cand = keyed_self_join(rows, ["table", "bucket"], "vec_id", HOT_KEY_THRESHOLD, N_SALTS, pair)
     first_match = F.coalesce(
         *[
             F.when(F.col("bkts_a")[t] == F.col("bkts_b")[t], F.lit(t))
@@ -597,8 +612,7 @@ def lsh_cosine_pairs(
         ]
     )
     return (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        cand.filter(F.col("id_a") < F.col("id_b"))
         .filter(F.col("table") == first_match)
         .withColumn("cos_sim", F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6))
         .filter(F.col("cos_sim") >= threshold)

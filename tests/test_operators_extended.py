@@ -20,6 +20,8 @@ from geetiles_spark.operators import (
 from geetiles_spark.operators import split as splitop
 from geetiles_spark.sources import chips as chipsrc
 
+from . import assert_salted_pair_join, capture_side_a
+
 
 class TestMosaic:
     def test_blocks_cover_all_tiles(self, spark, tiles_box):
@@ -347,6 +349,49 @@ class TestSimilarityScalePath:
         # Measured on this fixture: 194/257 = 0.755 (and 0.814 at the
         # contract's threshold 0.4 on sf0.01) — pin the floor at theory.
         assert brute and len(lsh) / len(brute) >= 0.70
+
+    def test_hot_bucket_salted_exact(self, spark, monkeypatch):
+        """Many near-parallel vectors share one bucket in every table: with
+        the module's threshold lowered to reach it, the salted run returns
+        exactly the unsalted run's pairs, and the hot bucket's side-a rows
+        spread over several salts."""
+        rng = np.random.default_rng(3)
+        base = rng.standard_normal(16)
+        vecs = [base + 0.01 * rng.standard_normal(16) for _ in range(120)]
+        vecs += [rng.standard_normal(16) for _ in range(60)]
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<float>",
+        )
+        a_sides = capture_side_a(monkeypatch, similarity)
+
+        def run(threshold):
+            monkeypatch.setattr(similarity, "HOT_KEY_THRESHOLD", threshold)
+            monkeypatch.setattr(similarity, "N_SALTS", 8)
+            a_sides.clear()
+            out = similarity.lsh_cosine_pairs(emb, 0.9, dim=16)
+            assert_salted_pair_join(
+                out._jdf.queryExecution().executedPlan().toString(), "lsh_cosine"
+            )
+            # the near-parallel vectors 0..119 share table 0's bucket
+            salts = (
+                a_sides[0]
+                .filter((F.col("table") == 0) & (F.col("vec_id") < 120))
+                .groupBy("bucket", "salt")
+                .count()
+                .collect()
+            )
+            got = {(r["id_a"], r["id_b"], r["cos_sim"]) for r in out.collect()}
+            return got, salts
+
+        plain, plain_salts = run(10**9)
+        salted, hot_salts = run(16)
+        assert {r["salt"] for r in plain_salts} == {0}
+        hot_bucket = max(plain_salts, key=lambda r: r["count"])
+        assert hot_bucket["count"] > 16
+        hot = [r for r in hot_salts if r["bucket"] == hot_bucket["bucket"]]
+        assert len(hot) > 1 and max(r["count"] for r in hot) < hot_bucket["count"]
+        assert len(plain) >= 120 * 119 // 2 * 0.9 and salted == plain
 
     def test_lsh_pairs_plan_has_no_distinct(self, spark):
         """Report-once (first agreeing table) replaced the terminal
@@ -1336,22 +1381,35 @@ class TestDhashSkew:
 
     @pytest.mark.parametrize("max_dist", [1, 4])
     def test_hot_segment_salted_exact(self, spark, monkeypatch, max_dist):
-        """A hot segment value takes the salted join (the module's
-        threshold is lowered to reach it on a small fixture) and returns
-        exactly the plain join's (id_a, id_b, dist) set, which is the
-        brute-force all-pairs answer."""
+        """A hot segment value is salted (the module's threshold is lowered
+        to reach it on a small fixture) and returns exactly the unsalted
+        run's (id_a, id_b, dist) set, which is the brute-force all-pairs
+        answer.  Both runs have the one salted plan shape; only the hot
+        run spreads the hot value's side-a rows over several salts."""
         rows, sigs = self._sigs(spark)
+        a_sides = capture_side_a(monkeypatch, dedup)
 
         def run():
+            a_sides.clear()
             out = dedup.dhash_hamming_pairs(sigs, max_dist=max_dist)
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            return {(r["id_a"], r["id_b"], r["dist"]) for r in out.collect()}, plan
+            assert_salted_pair_join(out._jdf.queryExecution().executedPlan().toString(), "dhash")
+            # segment 0 is all zeros for the 100 near-black tiles t000..t099
+            salts = {
+                r["salt"]: r["count"]
+                for r in a_sides[0]
+                .filter((F.col("seg") == 0) & (F.col("iid") < "t100"))
+                .groupBy("salt")
+                .count()
+                .collect()
+            }
+            return {(r["id_a"], r["id_b"], r["dist"]) for r in out.collect()}, salts
 
-        plain, plain_plan = run()
+        plain, plain_salts = run()
         monkeypatch.setattr(dedup, "HOT_KEY_THRESHOLD", 16)
         monkeypatch.setattr(dedup, "N_SALTS", 8)
-        salted, salted_plan = run()
-        assert "LeftAnti" not in plain_plan and "LeftAnti" in salted_plan
+        salted, hot_salts = run()
+        assert plain_salts == {0: 100}
+        assert len(hot_salts) > 1 and max(hot_salts.values()) < 50
         brute = set()
         for i, (ia, da, _, _) in enumerate(rows):
             for ib, db, _, _ in rows[i + 1:]:
@@ -1361,6 +1419,37 @@ class TestDhashSkew:
         # at least the ten one-bit near copies
         assert len(plain) >= 10 and plain == brute
         assert salted == plain
+
+
+def test_pair_operators_fire_no_job_until_forced(spark):
+    """The pair operators build a lazy plan: no probe, no size action —
+    the caller's action is the only work."""
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": list(range(40)),
+                "text": [f"the quick brown fox w{i % 7} jumps" for i in range(40)],
+            }
+        )
+    )
+    _, sigs = TestDhashSkew._sigs(spark)
+    sc = spark.sparkContext
+    group = "pair-operators-lazy"
+    sc.setJobGroup(group, "build pair operators")
+    try:
+        outs = [
+            dedup.lsh_candidate_pairs(docs),
+            dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5),
+            dedup.simhash_hamming_pairs(docs),
+            dedup.dhash_hamming_pairs(sigs),
+        ]
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        for out in outs:
+            out.collect()
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 class TestTextCuration:

@@ -19,6 +19,8 @@ sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as E  # noqa: E402
 
+from . import assert_salted_pair_join  # noqa: E402
+
 SF = "/root/testdata/sf0.001"
 
 # every join must be hash/equi, except vocab_topk: Catalyst constant-folds
@@ -146,19 +148,19 @@ class TestPlanShapes:
             assert not re.search(r"HashAggregate\(keys=\[id_a", plan), name
 
     def test_skew_stages_absent_when_no_hot_buckets(self, spark):
-        """VERDICT r3 #2 pay-as-you-go: the contract fixtures have no hot
-        bucket, so the plan must be the plain equi-join — no anti/semi
-        (hot-split) stages, no salt explode."""
+        """The contract fixtures have no hot key, and every pair self-join
+        still has the one salted shape (the hot fixtures in
+        test_operators_extended assert the same shape): no anti, semi or
+        union stage of a hot/cold split."""
         for name in (
             "dedup_minhash_lsh",
             "simhash_hamming_pairs",
             "ngram_jaccard_pairs",
             "image_dhash_pairs",
             "audio_fingerprint_pairs",
+            "embedding_lsh_pairs",
         ):
-            plan = _plan(spark, name)
-            assert "LeftAnti" not in plan, f"{name} kept the hot-split anti join"
-            assert "LeftSemi" not in plan, f"{name} kept the hot-split semi join"
+            assert_salted_pair_join(_plan(spark, name), name)
 
     def test_fused_zonal_is_one_join_free_python_stage(self, spark, aoi_box):
         """compute_proportions_fused synthesizes and histograms each chip in

@@ -234,14 +234,16 @@ def _brute_jaccard(texts, n=3, t=0.5):
 @pytest.mark.parametrize(
     "ids",
     [
+        pytest.param(list(range(18)), id="non-negative-ids"),
         pytest.param([f"doc{i:03d}" for i in range(18)], id="string-ids"),
         pytest.param([i - 4 for i in range(18)], id="negative-ids"),
         pytest.param([(1 << 33) + i for i in range(18)], id="ids-past-2^31"),
     ],
 )
 def test_ngram_packed_fallback_ids_exact(spark, ids):
-    # ids that cannot ride the packed single-long pair key must take the
-    # generic two-column path and stay exact (incl. the length filter)
+    # every id kind stays exact (incl. the length filter) and keeps its
+    # dtype — among them the non-negative ints below 2^31 that once rode a
+    # packed single-long pair key
     import pandas as pd
 
     rng = np.random.default_rng(11)
@@ -260,7 +262,7 @@ def test_ngram_packed_fallback_ids_exact(spark, ids):
         pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
     )
     out = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
-    # dtype must round-trip (packed path casts back; fallback never changes)
+    # dtype must round-trip
     assert dict(out.dtypes)["doc_a"] == dict(docs.dtypes)["doc_id"]
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in out.collect()}
     assert got == _brute_jaccard(texts, t=0.5)
