@@ -12,6 +12,11 @@ trivially vectorizable.
 Cell id layout (int64): ``(level << 58) | (ix << 29) | iy`` with
 ``ix = floor((lon + 180) / cell_deg)``, ``iy = floor((lat + 90) / cell_deg)``
 and ``cell_deg = 360 / 2**level``.  Level <= 28 keeps ix within 29 bits.
+
+The Spark joins compute the same ids as JVM column expressions
+(``operators/joins.py``: ``point_cell_expr`` and the codegen bbox cover);
+:func:`cell_id` and :func:`cover_bbox` here are their numpy references,
+which ``tests/test_joins.py`` compares them against.
 """
 
 from __future__ import annotations
@@ -55,11 +60,12 @@ def cover_bbox(
     maxy: np.ndarray,
     level: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Covering cell ids for N bboxes.
+    """Covering cell ids for N bboxes (finite bounds).
 
-    Returns ``(row_index, cell_id)`` pairs — the explode-ready representation
-    for a cell equi-join.  Vectorized: computes per-box cell ranges, then
-    enumerates with a single ragged expansion.
+    Returns ``(row_index, cell_id)`` pairs.  Vectorized: computes per-box
+    cell ranges, then enumerates with a single ragged expansion.  This is
+    the numpy reference for the JVM cover the cell joins run
+    (``operators.joins._explode_cells``); the engine itself does not call it.
     """
     size = cell_size_deg(level)
     nmax = (1 << level) - 1

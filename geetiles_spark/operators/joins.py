@@ -17,9 +17,11 @@ Two strategies, result-identical on non-degenerate inputs (tested against
 each other and the pandas oracle):
 
 * **cell join** — the engine's one tile-vs-footprint join (J1/J2 and the
-  J5 flood join): tiles explode to covering cell ids (:mod:`..geo.cells`),
-  the (small) footprint side explodes too and is broadcast, Spark
-  broadcast-hash-joins on the cell — the tile side never shuffles.
+  J5 flood join): tiles explode to covering cell ids (the grid of
+  :mod:`..geo.cells`) in a codegen ``explode`` over the clamped cell-index
+  ranges, no Python stage; the (small) footprint side explodes the same
+  way and is broadcast, Spark broadcast-hash-joins on the cell — the tile
+  side never shuffles.
   Duplicate pairs from multi-cell overlap are eliminated by the
   classic *report-once* rule (keep the pair only in the cell containing the
   lower-left corner of the bbox intersection) — a pure column filter, no
@@ -238,51 +240,46 @@ _PAIR_REFINE_SCHEMA = T.StructType(
 _BOUNDS = ["minx", "miny", "maxx", "maxy"]
 
 
+def _cell_ix(col, level: int, offset: float):
+    """Cell index of a lon (``offset`` 180) or lat (``offset`` 90) column,
+    clamped to [0, 2^level - 1] exactly as :func:`..geo.cells.cell_id`
+    clamps it: a corner at +180 lon or +90 lat stays in the last cell."""
+    size = cells.cell_size_deg(level)
+    return F.least(
+        F.greatest(F.floor((col + F.lit(offset)) / F.lit(size)), F.lit(0)),
+        F.lit((1 << level) - 1),
+    ).cast("long")
+
+
+def _cell_id(ix, iy, level: int):
+    return F.lit(level << 58).cast("long").bitwiseOR(F.shiftleft(ix, 29)).bitwiseOR(iy)
+
+
+def _cell(x, y, level: int):
+    """Cell id column ``(level << 58) | (ix << 29) | iy`` of a point."""
+    return _cell_id(_cell_ix(x, level, 180.0), _cell_ix(y, level, 90.0), level)
+
+
 def _explode_cells(df: DataFrame, level: int, carry: list[str]) -> DataFrame:
-    """(cell, *carry): one row per cell of each row's bbox cover (the
-    vectorized :func:`..geo.cells.cover_bbox`).  The bounds are cast to
-    double here, once: DECIMAL bounds (SQL arithmetic on literals) would
-    break the cover's float math, and a double->double cast is a no-op."""
+    """(cell, *carry): one row per cell of each row's bbox cover, as one
+    codegen generator over the clamped index ranges (the JVM twin of
+    :func:`..geo.cells.cover_bbox`).  The bounds are cast to double first,
+    so DECIMAL bounds (SQL arithmetic on literals) cover like their float
+    values.  A row with a null or NaN bound has no cells, so it matches
+    nothing; it must be dropped first, because the clamp maps a null or NaN
+    index to 0 (``greatest`` skips nulls, ``floor(NaN)`` is 0)."""
     df = df.select(
         *[F.col(c).cast("double").alias(c) if c in _BOUNDS else F.col(c)
           for c in dict.fromkeys(_BOUNDS + carry)]
+    ).dropna(subset=_BOUNDS)  # drops NaN as well as null
+    xs = F.sequence(_cell_ix(F.col("minx"), level, 180.0),
+                    _cell_ix(F.col("maxx"), level, 180.0))
+    ys = F.sequence(_cell_ix(F.col("miny"), level, 90.0),
+                    _cell_ix(F.col("maxy"), level, 90.0))
+    cover = F.flatten(
+        F.transform(xs, lambda ix: F.transform(ys, lambda iy: _cell_id(ix, iy, level)))
     )
-    dtypes = dict(df.dtypes)
-    schema = ", ".join(["cell long"] + [f"`{c}` {dtypes[c]}" for c in carry])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows, cids = cells.cover_bbox(
-                *(pdf[c].to_numpy() for c in _BOUNDS), level
-            )
-            out = {"cell": cids}
-            for c in carry:
-                out[c] = pdf[c].to_numpy()[rows]
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema)
-
-
-def _ref_cell_clamped(ref_x, ref_y, level: int, size: float):
-    """Report-once reference cell for a bbox-intersection corner, with the
-    SAME [0, 2^level - 1] index clamp ``cells.cell_id``/``cover_bbox``
-    apply (ADVICE r6: an unclamped corner at/past +180 lon or +90 lat put
-    the reference cell outside both sides' exploded covers, silently
-    dropping the overlapping pair)."""
-    nmax = (1 << level) - 1
-    ref_ix = F.least(
-        F.greatest(F.floor((ref_x + F.lit(180.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
-    ref_iy = F.least(
-        F.greatest(F.floor((ref_y + F.lit(90.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
-    return (
-        F.lit(level).cast("long") * F.lit(1 << 58).cast("long")
-        + ref_ix * F.lit(1 << 29).cast("long")
-        + ref_iy
-    )
+    return df.select(F.explode(cover).alias("cell"), *carry)
 
 
 def point_cell_expr(lon_col: str, lat_col: str, level: int):
@@ -291,17 +288,7 @@ def point_cell_expr(lon_col: str, lat_col: str, level: int):
     ``ArrowEvalPython`` round-trip per point (optimization guide §4.1:
     prefer built-ins; the pandas-UDF version serialized every point's
     lon/lat out to Python and a long back per row)."""
-    size = cells.cell_size_deg(level)
-    nmax = (1 << level) - 1
-    ix = F.least(
-        F.greatest(F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
-    iy = F.least(
-        F.greatest(F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(size)), F.lit(0)),
-        F.lit(nmax),
-    ).cast("long")
-    return F.lit(level << 58).bitwiseOR(F.shiftleft(ix, 29)).bitwiseOR(iy)
+    return _cell(F.col(lon_col), F.col(lat_col), level)
 
 
 def _ring_is_declared_bbox(ring, minx, miny, maxx, maxy) -> bool:
@@ -329,11 +316,14 @@ def _cell_pairs(
     tiles: DataFrame, other: DataFrame, key: str, carry: list[str], level: int
 ) -> DataFrame:
     """Every (tile, other) pair of overlapping bboxes, once, via the cell
-    equi-join: both sides explode to covering cells with their bounds
-    carried, the ``other`` side (``key``, bounds, ``carry``) is broadcast —
-    the tile side never shuffles — and a pair survives only in the cell
-    holding the lower-left corner of its bbox intersection (report-once: a
-    pure filter, no distinct).
+    equi-join: both sides explode to covering cells (:func:`_explode_cells`,
+    in codegen) with their bounds carried, the ``other`` side (``key``,
+    bounds, ``carry``) is broadcast — the tile side never shuffles — and a
+    pair survives only in the cell holding the lower-left corner of its
+    bbox intersection (report-once: a pure filter, no distinct; the corner's
+    cell is clamped by the same :func:`_cell_ix` as the covers, so a corner
+    at +180 lon or +90 lat stays inside both).  A row with a null or NaN
+    bound has no cells, so it pairs with nothing.
 
     Output: (tile_id, t_minx, t_miny, t_maxx, t_maxy, key, *carry).
     """
@@ -343,9 +333,8 @@ def _cell_pairs(
     ocells = _explode_cells(other, level, [key] + _BOUNDS + carry).select(
         key, "cell", *[F.col(c).alias("o_" + c) for c in _BOUNDS], *carry
     )
-    ref_cell = _ref_cell_clamped(
-        F.greatest("t_minx", "o_minx"), F.greatest("t_miny", "o_miny"),
-        level, cells.cell_size_deg(level),
+    ref_cell = _cell(
+        F.greatest("t_minx", "o_minx"), F.greatest("t_miny", "o_miny"), level
     )
     return tcells.join(F.broadcast(ocells), "cell").filter(
         (F.col("t_minx") <= F.col("o_maxx"))

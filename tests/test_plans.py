@@ -4,6 +4,8 @@ plans survive a 100x scale-up, asserted over the real contract queries.
 - no CartesianProduct anywhere, ever;
 - no BroadcastNestedLoopJoin except a one-row scalar attach (vocab_topk):
   every tile-vs-footprint join is one broadcast cell equi-join;
+- cell covers explode in the JVM: a cell join's only Python node is its
+  exact refine, and the rectangle point-in-polygon join has none;
 - relational scans push their filters into the parquet reader and prune
   columns (q1 must not read l_comment);
 - embedding search: the single-query top-k has no Python node, the batch
@@ -55,10 +57,13 @@ class TestPlanShapes:
     def test_tile_footprint_joins_are_one_broadcast_cell_join(self, spark):
         """J1/J2 and the J5 flood join share one cell pair-join: exactly one
         broadcast hash join on the cell id, no nested loop.  The J1/J2
-        operator counts are pinned so the shared join keeps their plans."""
+        operator counts are pinned so the shared join keeps their plans:
+        the cell cover is a codegen generator, so their Python nodes are
+        the area refine and the contract fixture's foreign-set generator (a
+        cached relation, printed under both of its scans)."""
         import re
 
-        pinned = {"geo_intersect_join": (5, 4), "geo_foreign_props": (5, 5)}
+        pinned = {"geo_intersect_join": (3, 4), "geo_foreign_props": (3, 5)}
         for name in (
             "geo_intersect_join",
             "geo_foreign_props",
@@ -75,6 +80,26 @@ class TestPlanShapes:
                     plan.count("Exchange"),
                 )
                 assert got == pinned[name], (name, got)
+
+    def test_cell_joins_explode_in_the_jvm(self, spark):
+        """No cell join sends its cover to Python: the only MapInPandas
+        left is an exact refine (J5 with footprints, the carried-ring pip),
+        the rectangle pip has no Python node at all, and the flat kNN
+        computes its point cells in codegen, leaving only its refine."""
+        import re
+
+        refines = {
+            "interval_spatial_join": 0,
+            "interval_spatial_join_exact": 1,
+            "pip_join": 0,
+            "pip_join_cells": 1,
+            "knn_points_cells": 1,
+        }
+        for name, n in refines.items():
+            plan = _plan(spark, name)
+            assert len(re.findall(r"\bMapInPandas\b", plan)) == n, name
+            assert "EvalPython" not in plan, name
+        assert not re.search(r"EvalPython|InPandas", _plan(spark, "pip_join"))
 
     def test_embedding_topk_runs_in_the_jvm(self, spark):
         import re

@@ -4,9 +4,8 @@ oracle twins cover end-to-end; these pin the new mechanisms directly)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from geetiles_spark.geo import cells, geom
+from geetiles_spark.geo import geom
 from geetiles_spark.operators import dedup, joins
 from geetiles_spark.operators.partitioning import spread
 
@@ -35,32 +34,6 @@ def test_spread_keyed_partitioning_feeds_groupby(spark):
     df = spread(spark.range(0, 100, 1, 1), key="id")
     plan = df.groupBy("id").count()._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 1
-
-
-# ---------------------------------------------------------------------------
-# point_cell_expr == cells.cell_id (the codegen twin)
-# ---------------------------------------------------------------------------
-
-
-def test_point_cell_expr_matches_numpy_kernel(spark):
-    rng = np.random.default_rng(7)
-    lon = np.concatenate(
-        [rng.uniform(-180, 180, 500), [-180.0, 180.0, 0.0, -179.999, 179.999]]
-    )
-    lat = np.concatenate(
-        [rng.uniform(-90, 90, 500), [-90.0, 90.0, 0.0, -89.999, 89.999]]
-    )
-    import pandas as pd
-
-    for level in (3, 9, 14, 28):
-        want = cells.cell_id(lon, lat, level)
-        df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-        got = (
-            df.select(joins.point_cell_expr("lon", "lat", level).alias("c"))
-            .toPandas()["c"]
-            .to_numpy()
-        )
-        np.testing.assert_array_equal(got, want)
 
 
 # ---------------------------------------------------------------------------
@@ -378,28 +351,8 @@ def test_exact_substr_spans_bruteforce(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r6 regressions: ref-cell clamp and kNN ring extension
+# ADVICE r6 regression: kNN ring extension
 # ---------------------------------------------------------------------------
-
-
-def test_ref_cell_clamped_at_antimeridian_and_pole(spark):
-    import pandas as pd
-
-    level = 4
-    size = cells.cell_size_deg(level)
-    nmax = (1 << level) - 1
-    df = spark.createDataFrame(
-        pd.DataFrame({"x": [180.0, -180.0, 0.0], "y": [90.0, -90.0, 0.0]})
-    )
-    got = df.select(
-        joins._ref_cell_clamped(F.col("x"), F.col("y"), level, size).alias("c")
-    ).toPandas()["c"]
-    for c, (x, y) in zip(got, [(180.0, 90.0), (-180.0, -90.0), (0.0, 0.0)]):
-        ix = (int(c) >> 29) & ((1 << 29) - 1)
-        iy = int(c) & ((1 << 29) - 1)
-        assert 0 <= ix <= nmax and 0 <= iy <= nmax
-        want = cells.cell_id(np.array([x]), np.array([y]), level)[0]
-        assert int(c) == int(want)
 
 
 def test_knn_cells_extends_rings_past_max_rings(spark):
