@@ -17,10 +17,12 @@ Reference semantics (``/root/reference/geetiles/cmds.py:305-369``):
 
 Spark design: ``spark.range(gridx*gridy)`` → ``mapInPandas`` running the
 vectorized numpy kernel per Arrow batch (projection, probes, AOI filter,
-hashing) → a second cheap pass adds ``area_km2`` once the collection-envelope
-UTM zone is known (global agg).  No shuffle anywhere; the only global barrier
-is the 4-number bounds aggregate.  At 10^12 scale the range source partitions
-evenly and AQE needs nothing to do; the AOI ring is a task-closure broadcast.
+hashing) → a second cheap pass adds ``area_km2`` once the
+collection-envelope UTM zone is known (global agg); the finished tile set is
+persisted, so the area pass runs once for all its consumers.  No shuffle
+anywhere; the only global barrier is the 4-number bounds aggregate.  At
+10^12 scale the range source partitions evenly and AQE needs nothing to do;
+the AOI ring is a task-closure broadcast.
 
 Row order parity: the reference enumerates ``itertools.product(range(gridx),
 range(gridy))`` and filters — ``row_idx`` preserves that order so the
@@ -73,8 +75,10 @@ def make_grid(
 ) -> DataFrame:
     """G1: unclipped degree-aligned grid tiles intersecting the AOI.
 
-    Returns tiles(row_idx, tile_id, geometry_wkb, minx..maxy, area_km2)
-    ordered by row_idx (reference enumeration order).
+    Returns tiles(row_idx, tile_id, geometry_wkb, minx..maxy, area_km2),
+    row order carried by row_idx (reference enumeration order), persisted
+    after the area pass (:func:`add_area_km2`): every consumer reads the
+    cached tile set and the area UDF runs once.
     """
     aoi_ring = geom.ring_close(np.asarray(aoi_ring, dtype=np.float64))
     cx, cy = polygon_centroid(aoi_ring)
@@ -164,7 +168,10 @@ def make_grid(
 
 def add_area_km2(tiles: DataFrame) -> DataFrame:
     """Second pass: measure tile areas in the UTM CRS of the collection's
-    envelope center (``partitions.py:38-46`` semantics — one zone for all)."""
+    envelope center (``partitions.py:38-46`` semantics — one zone for all).
+
+    ``tiles`` should be persisted: the envelope is one aggregate over it.
+    Returns the finished tile set, persisted (:func:`..cache.track`)."""
     b = tiles.agg(
         F.min("minx").alias("minx"),
         F.min("miny").alias("miny"),
@@ -195,7 +202,11 @@ def add_area_km2(tiles: DataFrame) -> DataFrame:
         area = np.abs((ex * ny2 - ex2 * ny).sum(axis=1)) / 2.0
         return pd.Series(area / 1e6)
 
-    return tiles.withColumn("area_km2", area_km2("minx", "miny", "maxx", "maxy"))
+    # persisted: the commit, zonal and the joins all read area_km2's
+    # relation, so the area UDF runs once per tile set, not per consumer
+    return cache.track(
+        tiles.withColumn("area_km2", area_km2("minx", "miny", "maxx", "maxy"))
+    )
 
 
 def dataset_hash(tiles: DataFrame) -> str:

@@ -24,9 +24,14 @@ each other and the pandas oracle):
   side never shuffles.
   Duplicate pairs from multi-cell overlap are eliminated by the
   classic *report-once* rule (keep the pair only in the cell containing the
-  lower-left corner of the bbox intersection) — a pure column filter, no
-  ``distinct`` shuffle.  The exact refine decodes each footprint's WKB
-  ring, carried through the join, once per task.
+  lower-left corner of the bbox intersection) — part of the join
+  condition, no ``distinct`` shuffle.  The exact refine decodes each
+  footprint's WKB ring, carried through the join, once per task.  The
+  cell expressions are SQL text, so building a join's plan costs a few
+  dozen Py4J calls.  J1 is one shuffle-free pass: a left-outer cell join,
+  a local sort on a tile-row key and one refine that takes each tile's
+  argmax as its rows stream by, holding at most one tile.  J2 refines the
+  pairs, then aggregates and joins back to the tiles.
 * **broadcast-refine** — the reference: the foreign set is collected and
   broadcast, one ``mapInPandas`` over tiles; per Arrow batch the
   foreign×tiles intersection-area matrix comes from the vectorized masked
@@ -240,46 +245,62 @@ _PAIR_REFINE_SCHEMA = T.StructType(
 _BOUNDS = ["minx", "miny", "maxx", "maxy"]
 
 
-def _cell_ix(col, level: int, offset: float):
-    """Cell index of a lon (``offset`` 180) or lat (``offset`` 90) column,
-    clamped to [0, 2^level - 1] exactly as :func:`..geo.cells.cell_id`
-    clamps it: a corner at +180 lon or +90 lat stays in the last cell."""
+def _cell_ix(c: str, level: int, offset: float) -> str:
+    """SQL cell index of a lon (``offset`` 180) or lat (``offset`` 90)
+    expression ``c``, clamped to [0, 2^level - 1] exactly as
+    :func:`..geo.cells.cell_id` clamps it: a corner at +180 lon or +90 lat
+    stays in the last cell.  A null or NaN ``c`` has no index (null): the
+    clamp alone would map it to 0 (``greatest`` skips nulls, ``floor(NaN)``
+    is 0).  Double literals carry the ``D`` suffix: a bare ``0.35`` is a
+    DECIMAL in Spark SQL."""
     size = cells.cell_size_deg(level)
-    return F.least(
-        F.greatest(F.floor((col + F.lit(offset)) / F.lit(size)), F.lit(0)),
-        F.lit((1 << level) - 1),
-    ).cast("long")
+    return (
+        f"CASE WHEN ({c}) IS NULL OR isnan({c}) THEN NULL ELSE CAST(least("
+        f"greatest(floor(({c} + {offset!r}D) / {size!r}D), 0), {(1 << level) - 1})"
+        " AS BIGINT) END"
+    )
 
 
-def _cell_id(ix, iy, level: int):
-    return F.lit(level << 58).cast("long").bitwiseOR(F.shiftleft(ix, 29)).bitwiseOR(iy)
+def _cell_id(ix: str, iy: str, level: int) -> str:
+    return f"({level << 58}L | shiftleft({ix}, 29) | {iy})"
 
 
-def _cell(x, y, level: int):
-    """Cell id column ``(level << 58) | (ix << 29) | iy`` of a point."""
+def _cell(x: str, y: str, level: int) -> str:
+    """SQL cell id ``(level << 58) | (ix << 29) | iy`` of a point; null
+    when either coordinate is null or NaN."""
     return _cell_id(_cell_ix(x, level, 180.0), _cell_ix(y, level, 90.0), level)
 
 
-def _explode_cells(df: DataFrame, level: int, carry: list[str]) -> DataFrame:
-    """(cell, *carry): one row per cell of each row's bbox cover, as one
+def _q(c: str) -> str:
+    return f"`{c}`"
+
+
+def _double_bounds(prefix: str) -> list[str]:
+    return [f"CAST({_q(c)} AS DOUBLE) AS {prefix}{c}" for c in _BOUNDS]
+
+
+def _explode_cells(
+    df: DataFrame, level: int, carry: list[str], outer: bool = False,
+    cell: str = "cell",
+) -> DataFrame:
+    """(``cell``, *carry): one row per cell of each row's bbox cover, as one
     codegen generator over the clamped index ranges (the JVM twin of
-    :func:`..geo.cells.cover_bbox`).  The bounds are cast to double first,
-    so DECIMAL bounds (SQL arithmetic on literals) cover like their float
-    values.  A row with a null or NaN bound has no cells, so it matches
-    nothing; it must be dropped first, because the clamp maps a null or NaN
-    index to 0 (``greatest`` skips nulls, ``floor(NaN)`` is 0)."""
-    df = df.select(
-        *[F.col(c).cast("double").alias(c) if c in _BOUNDS else F.col(c)
-          for c in dict.fromkeys(_BOUNDS + carry)]
-    ).dropna(subset=_BOUNDS)  # drops NaN as well as null
-    xs = F.sequence(_cell_ix(F.col("minx"), level, 180.0),
-                    _cell_ix(F.col("maxx"), level, 180.0))
-    ys = F.sequence(_cell_ix(F.col("miny"), level, 90.0),
-                    _cell_ix(F.col("maxy"), level, 90.0))
-    cover = F.flatten(
-        F.transform(xs, lambda ix: F.transform(ys, lambda iy: _cell_id(ix, iy, level)))
+    :func:`..geo.cells.cover_bbox`), in one ``selectExpr``.  ``carry`` holds
+    select expressions over ``df`` (a column name, or ``expr AS name``).
+    The cover reads the bounds cast to double, so DECIMAL bounds (SQL
+    arithmetic on literals) cover like their float values.  A row with a
+    null or NaN bound has no cells (``sequence`` over a null index is
+    null), so it matches nothing; with ``outer`` it keeps one row with a
+    null cell (``explode_outer``)."""
+    b = {c: f"CAST({_q(c)} AS DOUBLE)" for c in _BOUNDS}
+    xs = f"{_cell_ix(b['minx'], level, 180.0)}, {_cell_ix(b['maxx'], level, 180.0)}"
+    ys = f"{_cell_ix(b['miny'], level, 90.0)}, {_cell_ix(b['maxy'], level, 90.0)}"
+    cover = (
+        f"flatten(transform(sequence({xs}), ix -> transform(sequence({ys}), "
+        f"iy -> {_cell_id('ix', 'iy', level)})))"
     )
-    return df.select(F.explode(cover).alias("cell"), *carry)
+    gen = "explode_outer" if outer else "explode"
+    return df.selectExpr(f"{gen}({cover}) AS {cell}", *carry)
 
 
 def point_cell_expr(lon_col: str, lat_col: str, level: int):
@@ -287,8 +308,9 @@ def point_cell_expr(lon_col: str, lat_col: str, level: int):
     int64 ids for finite inputs, but whole-stage-codegen instead of an
     ``ArrowEvalPython`` round-trip per point (optimization guide §4.1:
     prefer built-ins; the pandas-UDF version serialized every point's
-    lon/lat out to Python and a long back per row)."""
-    return _cell(F.col(lon_col), F.col(lat_col), level)
+    lon/lat out to Python and a long back per row).  A null or NaN
+    coordinate gives a null cell, which joins no cell."""
+    return F.expr(_cell(_q(lon_col), _q(lat_col), level))
 
 
 def _ring_is_declared_bbox(ring, minx, miny, maxx, maxy) -> bool:
@@ -313,36 +335,50 @@ def choose_level(foreign: DataFrame) -> int:
 
 
 def _cell_pairs(
-    tiles: DataFrame, other: DataFrame, key: str, carry: list[str], level: int
+    tiles: DataFrame,
+    other: DataFrame,
+    key: str,
+    carry: list[str],
+    level: int,
+    how: str = "inner",
+    tile_carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Every (tile, other) pair of overlapping bboxes, once, via the cell
     equi-join: both sides explode to covering cells (:func:`_explode_cells`,
     in codegen) with their bounds carried, the ``other`` side (``key``,
-    bounds, ``carry``) is broadcast — the tile side never shuffles — and a
-    pair survives only in the cell holding the lower-left corner of its
-    bbox intersection (report-once: a pure filter, no distinct; the corner's
-    cell is clamped by the same :func:`_cell_ix` as the covers, so a corner
-    at +180 lon or +90 lat stays inside both).  A row with a null or NaN
-    bound has no cells, so it pairs with nothing.
+    bounds, ``carry``: select expressions over ``other``) is broadcast —
+    the tile side never shuffles — and a pair survives only in the cell
+    holding the lower-left corner of its bbox intersection (report-once;
+    the corner's cell is clamped by the same :func:`_cell_ix` as the
+    covers, so a corner at +180 lon or +90 lat stays inside both).
 
-    Output: (tile_id, t_minx, t_miny, t_maxx, t_maxy, key, *carry).
+    The bbox and report-once tests are the join condition, so
+    ``how="left"`` keeps each tile cell that pairs with nothing, once, with
+    a null ``key``, and a tile with a null or NaN bound keeps one such row;
+    inner, that tile pairs with nothing.  The join is built from SQL text:
+    a few dozen Py4J calls, not one per column expression.
+
+    Output: (tile_id, *tile_carry, t_minx, t_miny, t_maxx, t_maxy, key,
+    *carry), by output name.
     """
-    tcells = _explode_cells(tiles, level, ["tile_id"] + _BOUNDS).select(
-        "tile_id", "cell", *[F.col(c).alias("t_" + c) for c in _BOUNDS]
+    tcells = _explode_cells(
+        tiles, level, ["tile_id", *tile_carry, *_double_bounds("t_")],
+        outer=how == "left",
     )
-    ocells = _explode_cells(other, level, [key] + _BOUNDS + carry).select(
-        key, "cell", *[F.col(c).alias("o_" + c) for c in _BOUNDS], *carry
+    # the other side's bounds travel as one struct: one select expression
+    obox = ", ".join(f"'{c}', CAST({_q(c)} AS DOUBLE)" for c in _BOUNDS)
+    ocells = _explode_cells(
+        other, level, [key, f"named_struct({obox}) AS o_box", *carry], cell="o_cell"
     )
     ref_cell = _cell(
-        F.greatest("t_minx", "o_minx"), F.greatest("t_miny", "o_miny"), level
+        "greatest(t_minx, o_box.minx)", "greatest(t_miny, o_box.miny)", level
     )
-    return tcells.join(F.broadcast(ocells), "cell").filter(
-        (F.col("t_minx") <= F.col("o_maxx"))
-        & (F.col("t_maxx") >= F.col("o_minx"))
-        & (F.col("t_miny") <= F.col("o_maxy"))
-        & (F.col("t_maxy") >= F.col("o_miny"))
-        & (F.col("cell") == ref_cell)
-    ).select("tile_id", *["t_" + c for c in _BOUNDS], key, *carry)
+    cond = F.expr(
+        "cell = o_cell AND t_minx <= o_box.maxx AND t_maxx >= o_box.minx"
+        " AND t_miny <= o_box.maxy AND t_maxy >= o_box.miny"
+        f" AND cell = {ref_cell}"
+    )
+    return tcells.join(F.broadcast(ocells), cond, how).drop("cell", "o_cell", "o_box")
 
 
 def _ring_groups(
@@ -368,6 +404,23 @@ def _tile_boxes(pdf: pd.DataFrame) -> list[np.ndarray]:
     return [pdf["t_" + c].to_numpy() for c in _BOUNDS]
 
 
+def _pair_areas(pdf: pd.DataFrame, groups: list) -> np.ndarray:
+    """Exact intersection area of each row's tile box with its foreign
+    ring (0 for a row that pairs with no foreign)."""
+    boxes = _tile_boxes(pdf)
+    areas = np.zeros(len(pdf), dtype=np.float64)
+    for idx, ring in groups:
+        areas[idx] = geom.clip_areas_ring_boxes_exact(ring, *(b[idx] for b in boxes))
+    return areas
+
+
+# the foreign side of J1/J2's cell join: key and carried ring, as
+# :func:`_cell_pairs` takes them
+_FOREIGN_SIDE = (
+    "tile_id AS foreign_id", ["row_idx AS foreign_idx", "geometry_wkb AS foreign_wkb"]
+)
+
+
 def spatial_pairs_cell_join(
     tiles: DataFrame, foreign: DataFrame, level: int | None = None
 ) -> DataFrame:
@@ -380,24 +433,11 @@ def spatial_pairs_cell_join(
     treated as their bounding boxes (exact for grid tiles).
     """
     level = level or choose_level(foreign)
-    pairs = _cell_pairs(
-        tiles,
-        foreign.select(
-            F.col("tile_id").alias("foreign_id"), *_BOUNDS,
-            F.col("row_idx").alias("foreign_idx"),
-            F.col("geometry_wkb").alias("foreign_wkb"),
-        ),
-        "foreign_id", ["foreign_idx", "foreign_wkb"], level,
-    )
+    pairs = _cell_pairs(tiles, foreign, *_FOREIGN_SIDE, level)
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf, groups in _ring_groups(batches, "foreign_id", "foreign_wkb"):
-            boxes = _tile_boxes(pdf)
-            areas = np.zeros(len(pdf), dtype=np.float64)
-            for idx, ring in groups:
-                areas[idx] = geom.clip_areas_ring_boxes_exact(
-                    ring, *(b[idx] for b in boxes)
-                )
+            areas = _pair_areas(pdf, groups)
             keep = areas > 0
             out = pdf.loc[keep, ["tile_id", "foreign_idx", "foreign_id"]].copy()
             out["inter_area"] = areas[keep]
@@ -409,17 +449,58 @@ def spatial_pairs_cell_join(
 def intersect_join_cells(
     tiles: DataFrame, foreign: DataFrame, level: int | None = None
 ) -> DataFrame:
-    """J1 via cell join: argmax area, first-max in foreign row order, '-1'
-    for tiles with no overlapping foreign."""
-    # persist: the pair set feeds both the argmax agg and the left join
-    # back to tiles — without it the whole explode+refine chain re-executes
-    # per consumer (production equivalent: checkpoint pairs to a table)
-    pairs = cache.track(spatial_pairs_cell_join(tiles, foreign, level))
-    best = _argmax_foreign(pairs)
-    return (
-        tiles.select("tile_id")
-        .join(best, "tile_id", "left")
-        .fillna({"foreign_id": "-1"})
+    """J1 via cell join, in one shuffle-free pass: (tile_id, foreign_id)
+    per tile row, the foreign id of the max intersection area (ties: first
+    in foreign row order, then the larger id, as :func:`_argmax_foreign`),
+    '-1' for a tile that overlaps no foreign with positive area (a null or
+    NaN bound overlaps nothing).
+
+    Each tile row gets a row key, explodes with ``explode_outer`` and
+    left-outer broadcast-joins the foreign cells (:func:`_cell_pairs`), so
+    every tile row reaches the refine.  A local sort on the row key (no
+    exchange: the tile side never moves) makes each tile's rows
+    contiguous, and one ``mapInPandas`` computes the exact areas and takes
+    the argmax as the rows stream by.  Its state is at most one tile: the
+    rows of the last tile of an Arrow batch, which the next batch may
+    continue.  Duplicate tile rows each keep their own output row.
+    """
+    level = level or choose_level(foreign)
+    pairs = _cell_pairs(
+        tiles.withColumn("tile_row", F.expr("monotonically_increasing_id()")),
+        foreign, *_FOREIGN_SIDE, level, how="left", tile_carry=("tile_row",),
+    )
+
+    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        held = None  # the last tile's rows: the next batch may continue it
+        for pdf, groups in _ring_groups(batches, "foreign_id", "foreign_wkb"):
+            pdf = pdf.assign(area=_pair_areas(pdf, groups))
+            if held is not None:
+                pdf = pd.concat([held, pdf], ignore_index=True)
+            last = pdf["tile_row"].to_numpy() == pdf["tile_row"].iloc[-1]
+            held = pdf[last]
+            if not last.all():
+                yield _argmax_rows(pdf[~last])
+        if held is not None:
+            yield _argmax_rows(held)
+
+    return pairs.sortWithinPartitions(pairs["tile_row"]).mapInPandas(refine, _J1_SCHEMA)
+
+
+def _argmax_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """(tile_id, foreign_id) per ``tile_row`` of complete tiles' candidate
+    rows: the max ``area`` > 0, then the min ``foreign_idx``, then the max
+    ``foreign_id`` — :func:`_argmax_foreign`'s order — else '-1'."""
+    hit = pdf[pdf["area"] > 0].sort_values(
+        ["tile_row", "area", "foreign_idx", "foreign_id"],
+        ascending=[True, False, True, False],
+    )
+    best = hit.drop_duplicates("tile_row").set_index("tile_row")["foreign_id"]
+    rows = pdf.drop_duplicates("tile_row")
+    return pd.DataFrame(
+        {
+            "tile_id": rows["tile_id"].to_numpy(),
+            "foreign_id": rows["tile_row"].map(best).fillna("-1").to_numpy(),
+        }
     )
 
 
@@ -581,7 +662,7 @@ def point_in_polygon_join(
 
         return cand.mapInPandas(refine_carried, schema)
 
-    gcells = _explode_cells(polys, level, ["tile_id"] + _BOUNDS)
+    gcells = _explode_cells(polys, level, ["tile_id", *_double_bounds("")])
     cand = pcells.join(F.broadcast(gcells), "cell")
 
     prows = polys.select(

@@ -1,7 +1,9 @@
 """The cell index of the tile-vs-footprint joins (``operators/joins.py``):
 the codegen cover and point cell ids equal the numpy kernels of
-:mod:`geetiles_spark.geo.cells`, and a null or NaN bbox bound matches
-nothing instead of failing the join."""
+:mod:`geetiles_spark.geo.cells`, a null or NaN bbox bound or point matches
+nothing instead of failing the join or landing in the corner cell, J1's
+one-pass refine keeps the argmax rule, and ``make_grid`` returns its
+persisted tile set."""
 
 import numpy as np
 import pandas as pd
@@ -119,9 +121,7 @@ def test_cell_clamped_at_antimeridian_and_pole(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"x": [180.0, -180.0, 0.0], "y": [90.0, -90.0, 0.0]})
     )
-    got = df.select(
-        joins._cell(F.col("x"), F.col("y"), level).alias("c")
-    ).toPandas()["c"]
+    got = df.selectExpr(f"{joins._cell('x', 'y', level)} AS c").toPandas()["c"]
     for c, (x, y) in zip(got, [(180.0, 90.0), (-180.0, -90.0), (0.0, 0.0)]):
         ix = (int(c) >> 29) & ((1 << 29) - 1)
         iy = int(c) & ((1 << 29) - 1)
@@ -202,3 +202,215 @@ def test_null_or_nan_bound_matches_nothing(spark):
     want_j5 = j5(clean_tiles, clean_fp)
     assert want_j5
     assert j5(tiles, fp) == want_j5
+
+
+# ---------------------------------------------------------------------------
+# a null or NaN point has no cell (point_cell_expr, pip, kNN)
+# ---------------------------------------------------------------------------
+
+
+def test_point_cell_expr_null_or_nan_point_has_no_cell(spark):
+    nan = float("nan")
+    df = spark.createDataFrame(
+        pd.DataFrame({"lon": [None, nan, 1.0, nan, -180.0],
+                      "lat": [1.0, 1.0, None, nan, -90.0]}),
+        "lon double, lat double",
+    )
+    got = df.select(joins.point_cell_expr("lon", "lat", 12).alias("c")).toPandas()["c"]
+    assert got[:4].isna().all()
+    assert int(got[4]) == int(cells.cell_id(np.array([-180.0]), np.array([-90.0]), 12)[0])
+
+
+def _corner_points(spark, with_bad: bool):
+    """Points near the (-180, -90) corner, whose cell the clamp gave a null
+    or NaN point; ``with_bad`` adds such points."""
+    rng = np.random.default_rng(5)
+    lon = list(-180.0 + rng.uniform(0.001, 0.3, 12))
+    lat = list(-90.0 + rng.uniform(0.001, 0.3, 12))
+    if with_bad:
+        lon += [None, float("nan"), -179.95]
+        lat += [None, float("nan"), None]
+    pdf = pd.DataFrame({"point_id": np.arange(len(lon)), "lon": lon, "lat": lat})
+    return spark.createDataFrame(pdf, "point_id long, lon double, lat double")
+
+
+def _corner_polys(spark, rect_only: bool):
+    rings = [geom.box_ring(-180.0, -90.0, -179.85, -89.85),
+             geom.box_ring(-179.9, -89.9, -179.7, -89.7)]
+    if not rect_only:
+        rings.append(np.array([[-180.0, -90.0], [-179.75, -90.0], [-180.0, -89.75],
+                               [-180.0, -90.0]]))
+    rows = []
+    for k, ring in enumerate(rings):
+        r = np.asarray(ring)
+        rows.append({"tile_id": f"p{k}", "geometry_wkb": bytes(geom.polygon_to_wkb(r)),
+                     "minx": float(r[:, 0].min()), "miny": float(r[:, 1].min()),
+                     "maxx": float(r[:, 0].max()), "maxy": float(r[:, 1].max())})
+    return spark.createDataFrame(pd.DataFrame(rows))
+
+
+@pytest.mark.parametrize("rect_only", [True, False])
+@pytest.mark.parametrize("broadcast_polys", [True, False])
+def test_pip_ignores_null_or_nan_points(spark, rect_only, broadcast_polys):
+    polys = _corner_polys(spark, rect_only)
+
+    def run(with_bad):
+        out = joins.point_in_polygon_join(
+            _corner_points(spark, with_bad), polys, level=12,
+            broadcast_polys=broadcast_polys,
+        )
+        return sorted((r["point_id"], r["tile_id"]) for r in out.collect())
+
+    want = run(False)
+    assert want
+    assert run(True) == want
+
+
+def test_knn_cells_ignores_null_or_nan_points(spark):
+    # k exceeds the point count: every candidate is returned, so a null
+    # point counted in the corner cell would show up with a NaN distance
+    qs = [("q", -179.9, -89.9)]
+
+    def run(with_bad):
+        out = joins.knn_join_cells(
+            _corner_points(spark, with_bad), qs, k=20, level=12, id_col="point_id"
+        )
+        return sorted((r["point_id"], round(r["dist_m"], 6)) for r in out.collect())
+
+    want = run(False)
+    assert len(want) == 12
+    assert run(True) == want
+
+
+# ---------------------------------------------------------------------------
+# J1 in one pass: left-outer cell join + streaming argmax refine
+# ---------------------------------------------------------------------------
+
+
+def _box_wkb(x0, y0, x1, y1) -> bytes:
+    return bytes(geom.polygon_to_wkb(geom.box_ring(x0, y0, x1, y1)))
+
+
+def _j1_tiles() -> pd.DataFrame:
+    nan = float("nan")
+    rows = [
+        ("tie", 0.0, 0.0, 2.0, 2.0),  # two equal overlaps: f3 (idx 3) beats fz (idx 5)
+        ("none", 10.0, 0.0, 11.0, 1.0),  # overlaps nothing
+        ("touch", 10.0, 10.0, 11.0, 11.0),  # an edge touch only: zero area
+        ("big", 4.0, 4.0, 9.0, 9.0),  # many candidates, split across batches
+        ("dup", 5.0, 0.0, 6.0, 1.0),
+        ("dup", 5.0, 0.0, 6.0, 1.0),  # a duplicate row keeps its own row
+        ("tnull", None, 0.0, 1.0, 1.0),
+        ("tnan", 0.0, nan, 1.0, 1.0),
+    ]
+    return pd.DataFrame(rows, columns=["tile_id", *_BOUNDS])
+
+
+def _j1_foreign() -> pd.DataFrame:
+    boxes = [
+        (0, "fx", 4.5, 4.5, 5.5, 5.5),
+        (3, "f3", -1.0, 0.0, 1.0, 2.0),
+        (5, "fz", 1.0, 0.0, 3.0, 2.0),
+        (6, "ft", 11.0, 10.0, 12.0, 11.0),
+        (7, "fd", 5.5, -1.0, 7.0, 0.5),
+        (8, "fb1", 5.0, 5.0, 7.0, 7.5),
+        (9, "fb2", 6.0, 4.0, 8.5, 8.5),
+        (10, "fb3", 3.0, 8.0, 9.5, 9.5),
+    ]
+    return pd.DataFrame(
+        [{"row_idx": i, "tile_id": f, "geometry_wkb": _box_wkb(*b),
+          **dict(zip(_BOUNDS, b))} for i, f, *b in boxes]
+    )
+
+
+def _j1_oracle(tiles: pd.DataFrame, foreign: pd.DataFrame) -> list:
+    """Per tile row: the max positive exact area, then the lowest foreign
+    row_idx, then the largest id; '-1' when no area is positive."""
+    out = []
+    for t in tiles.itertuples():
+        box = [np.array([getattr(t, c)], dtype=np.float64) for c in _BOUNDS]
+        best = None
+        if all(np.isfinite(b[0]) for b in box):
+            for f in foreign.itertuples():
+                a = geom.clip_areas_ring_boxes_exact(
+                    geom.wkb_to_polygon(f.geometry_wkb), *box
+                )[0]
+                if a > 0 and (best is None or (a, -f.row_idx, f.tile_id) > best):
+                    best = (a, -f.row_idx, f.tile_id)
+        out.append((t.tile_id, best[2] if best else "-1"))
+    return sorted(out)
+
+
+_J1_TILE_SCHEMA = "tile_id string, minx double, miny double, maxx double, maxy double"
+_J1_FOREIGN_SCHEMA = (
+    "row_idx long, tile_id string, geometry_wkb binary, "
+    "minx double, miny double, maxx double, maxy double"
+)
+
+
+@pytest.mark.parametrize("level", [3, 8])
+@pytest.mark.parametrize("batch_rows", [None, 2])
+def test_intersect_join_cells_one_pass(spark, level, batch_rows):
+    tiles_pdf, foreign_pdf = _j1_tiles(), _j1_foreign()
+    want = _j1_oracle(tiles_pdf, foreign_pdf)
+    assert dict(want)["tie"] == "f3" and dict(want)["big"] == "fb2"
+    assert {t: f for t, f in want if t in ("none", "touch", "tnull", "tnan")} == {
+        "none": "-1", "touch": "-1", "tnull": "-1", "tnan": "-1"}
+    tiles = spark.createDataFrame(tiles_pdf, _J1_TILE_SCHEMA).repartition(2)
+    foreign = spark.createDataFrame(foreign_pdf, _J1_FOREIGN_SCHEMA)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if batch_rows is not None:
+        spark.conf.set(key, str(batch_rows))
+    try:
+        got = joins.intersect_join_cells(tiles, foreign, level).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert sorted((r["tile_id"], r["foreign_id"]) for r in got) == want
+
+
+def test_intersect_join_cells_empty_foreign(spark):
+    tiles = spark.createDataFrame(_j1_tiles(), _J1_TILE_SCHEMA)
+    foreign = spark.createDataFrame([], _J1_FOREIGN_SCHEMA)
+    got = joins.intersect_join_cells(tiles, foreign, 6).collect()
+    assert sorted(r["tile_id"] for r in got) == sorted(_j1_tiles()["tile_id"])
+    assert {r["foreign_id"] for r in got} == {"-1"}
+
+
+def test_intersect_join_cells_plan_is_one_shuffle_free_pass(spark):
+    import re
+
+    tiles = spark.createDataFrame(_j1_tiles(), _J1_TILE_SCHEMA)
+    foreign = spark.createDataFrame(_j1_foreign(), _J1_FOREIGN_SCHEMA)
+    plan = (
+        joins.intersect_join_cells(tiles, foreign, 6)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+    assert "hashpartitioning" not in plan, plan
+    assert "InMemory" not in plan, plan
+    assert len(re.findall(r"BroadcastHashJoin \[cell", plan)) == 1, plan
+
+
+# ---------------------------------------------------------------------------
+# the finished tile set is persisted once, after its area pass
+# ---------------------------------------------------------------------------
+
+
+def test_make_grid_returns_the_persisted_tile_set(spark, aoi_box):
+    from geetiles_spark import cache
+    from geetiles_spark.operators import grid
+    from geetiles_spark.operators import select as selectop
+
+    geoms = spark.createDataFrame(
+        pd.DataFrame({"geom_wkb": [_box_wkb(6.095, 49.695, 6.105, 49.705)]})
+    )
+    with cache.persist_scope():
+        for tiles in (
+            grid.make_grid(spark, aoi_box, 500, num_partitions=2),
+            selectop.select_partitions(geoms, aoi_box),
+        ):
+            assert "area_km2" in tiles.columns
+            root = tiles._jdf.queryExecution().executedPlan()
+            assert root.nodeName() == "InMemoryTableScan", root.toString()
+            assert "area_km2" in root.toString()

@@ -16,8 +16,9 @@ plans survive a 100x scale-up, asserted over the real contract queries.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as E  # noqa: E402
 
@@ -59,11 +60,14 @@ class TestPlanShapes:
         broadcast hash join on the cell id, no nested loop.  The J1/J2
         operator counts are pinned so the shared join keeps their plans:
         the cell cover is a codegen generator, so their Python nodes are
-        the area refine and the contract fixture's foreign-set generator (a
-        cached relation, printed under both of its scans)."""
+        the area refine and the contract fixture's tile generator (a cached
+        relation, printed under each of its scans).  J1 is one pass: its only exchanges are the foreign
+        cells' broadcast and the query's final sort, and none hash-
+        partitions (no argmax shuffle, no back-join); J2 still aggregates
+        and joins back."""
         import re
 
-        pinned = {"geo_intersect_join": (3, 4), "geo_foreign_props": (3, 5)}
+        pinned = {"geo_intersect_join": (2, 2), "geo_foreign_props": (3, 5)}
         for name in (
             "geo_intersect_join",
             "geo_foreign_props",
@@ -80,6 +84,7 @@ class TestPlanShapes:
                     plan.count("Exchange"),
                 )
                 assert got == pinned[name], (name, got)
+        assert "hashpartitioning" not in _plan(spark, "geo_intersect_join")
 
     def test_cell_joins_explode_in_the_jvm(self, spark):
         """No cell join sends its cover to Python: the only MapInPandas
