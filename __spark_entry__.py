@@ -71,7 +71,7 @@ def entry(spark: SparkSession) -> DataFrame:
     ch = chipsrc.generate_chips(tiles, LABELS)
     props = zonal.compute_proportions(tiles, ch, LABELS)
     foreign = _fixture_foreign(spark)
-    j2 = joins.foreign_proportions_broadcast(tiles, foreign)
+    j2 = joins.foreign_proportions_cells(tiles, foreign)
     with_split = splitop.split(tiles, 8, 0.3, 0.5, 0.3, 0.2)
 
     docs = _t(spark, sf_dir, "documents")

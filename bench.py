@@ -59,7 +59,7 @@ def geo_pipeline(spark, aoi, chip_size=1000):
     from pyspark.sql import functions as F
     from pyspark.sql.observation import Observation
 
-    tiles = gridop.make_grid(spark, aoi, chip_size).cache()
+    tiles = gridop.make_grid(spark, aoi, chip_size)
     n_tiles = tiles.count()
     # fused chip-acquisition + zonal stats: the payload never crosses the
     # Arrow boundary (chaining generate->zonal serializes every chip twice)

@@ -1,48 +1,45 @@
 """Spatial joins: argmax-overlap intersect (J1), area-weighted foreign
 proportions (J2), AOI semi-join (J3), point-in-polygon join, and kNN.
 
-Reference semantics (``/root/reference/geetiles/partitions.py:470-507``):
-for each tile, scan ALL foreign geometries with ``intersects`` (an O(N×M)
-Python nested loop — the reference's scalability cliff), then
+Reference semantics (``geetiles/partitions.py:470-507``): for each tile,
+scan ALL foreign geometries with ``intersects`` (an O(N×M) Python nested
+loop — the reference's scalability cliff), then
 
-* J1 (``geet intersect``): foreign id of the max intersection area, ``-1``
-  when nothing intersects; ties resolve to the first max in foreign row
-  order (``np.argmax``);
+* J1 (``geet intersect``): foreign id of the max intersection area; ties
+  resolve to the first max in foreign row order (``np.argmax``).  A tile
+  whose intersections all have zero area (it only touches foreigns) gets
+  the first toucher; a tile that meets nothing gets ``-1``;
 * J2 (``geet lp.from_foreign``): weights ``w_i = area_i / Σ area`` over the
   intersecting set, output ``Σ w_i · props_i`` per class key (missing keys
   contribute 0 — pandas NaN-skip semantics at ``partitions.py:500``), plus
-  the argmax foreign id.
+  the argmax foreign id as in J1.
 
-Two strategies, result-identical on non-degenerate inputs (tested against
-each other and the pandas oracle):
+J1 and J2 have one strategy, the **cell join** — the engine's one
+tile-vs-footprint join (J1/J2 and the J5 flood join): tiles explode to
+covering cell ids (the grid of :mod:`..geo.cells`) in a codegen ``explode``
+over the clamped cell-index ranges, no Python stage; the (small) footprint
+side explodes the same way and is broadcast, Spark broadcast-hash-joins on
+the cell — the tile side never shuffles.  Duplicate pairs from multi-cell
+overlap are eliminated by the classic *report-once* rule (keep the pair
+only in the cell containing the lower-left corner of the bbox
+intersection) — part of the join condition, no ``distinct`` shuffle.  The
+cell expressions are SQL text, so building a join's plan costs a few dozen
+Py4J calls.
 
-* **cell join** — the engine's one tile-vs-footprint join (J1/J2 and the
-  J5 flood join): tiles explode to covering cell ids (the grid of
-  :mod:`..geo.cells`) in a codegen ``explode`` over the clamped cell-index
-  ranges, no Python stage; the (small) footprint side explodes the same
-  way and is broadcast, Spark broadcast-hash-joins on the cell — the tile
-  side never shuffles.
-  Duplicate pairs from multi-cell overlap are eliminated by the
-  classic *report-once* rule (keep the pair only in the cell containing the
-  lower-left corner of the bbox intersection) — part of the join
-  condition, no ``distinct`` shuffle.  The exact refine decodes each
-  footprint's WKB ring, carried through the join, once per task.  The
-  cell expressions are SQL text, so building a join's plan costs a few
-  dozen Py4J calls.  J1 is one shuffle-free pass: a left-outer cell join,
-  a local sort on a tile-row key and one refine that takes each tile's
-  argmax as its rows stream by, holding at most one tile.  J2 refines the
-  pairs, then aggregates and joins back to the tiles.
-* **broadcast-refine** — the reference: the foreign set is collected and
-  broadcast, one ``mapInPandas`` over tiles; per Arrow batch the
-  foreign×tiles intersection-area matrix comes from the vectorized masked
-  Sutherland–Hodgman (:func:`..geo.geom.clip_areas_ring_boxes`).  It alone
-  reproduces the reference's touch-only tie-break (below).
+J1 and J2 are the same shuffle-free pass: a left-outer cell join, a local
+sort on a tile-row key and one refine that decodes each footprint's WKB
+ring (carried through the join) once per task, computes the exact areas
+and, as each tile's rows stream by, takes its argmax and, for J2, its
+area-weighted props (the footprint props ride the broadcast side).  The
+join's bbox test is inclusive, so a touching footprint reaches the refine,
+which applies the reference's touch rule (:func:`_touches`).
 
-Degenerate-touch semantics: pairs whose intersection has zero area
-(boundary touch) carry weight 0 in the reference too; they can only matter
-when a tile touches foreigns but overlaps none — reference returns the
-first toucher, the cell path returns '-1' (documented divergence; the
-broadcast path reproduces the reference exactly via a SAT fallback).
+:func:`intersect_join_broadcast` is kept only as the reference J1 that
+checks the cell path; no engine path calls it.  It collects the foreign
+set (at most :data:`MAX_BROADCAST_POLYS` rows), broadcasts it and, per
+Arrow batch, computes the foreign×tiles intersection-area matrix with the
+vectorized masked Sutherland–Hodgman
+(:func:`..geo.geom.clip_areas_ring_boxes_exact`).
 """
 
 from __future__ import annotations
@@ -55,37 +52,48 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import cache
 from ..geo import cells, geom, s2
 
+_BOUNDS = ["minx", "miny", "maxx", "maxy"]
+
+# the driver collects of the pip broadcast path and the reference J1 hold
+# at most this many polygons: past it they refuse (the pip shuffle path,
+# broadcast_polys=False, and the cell J1/J2 collect nothing)
+MAX_BROADCAST_POLYS = 100_000
+
+
+def _touches(ring, x0, y0, x1, y1) -> bool:
+    """The reference's ``intersects`` of a foreign ring and a tile box
+    whose intersection has zero area: touching counts.  The one touch rule
+    of the cell refine and the reference J1's :func:`_touch_fallback`."""
+    return geom.convex_intersects(geom.box_ring(x0, y0, x1, y1), ring)
+
+
 # --------------------------------------------------------------------------
-# foreign-set representation
+# the reference J1: broadcast-refine
 # --------------------------------------------------------------------------
 
 
 def collect_foreign(foreign: DataFrame) -> list[dict]:
-    """Driver-side foreign set for the broadcast path, in row order (argmax
-    tie parity requires the order)."""
-    props_col = (
-        F.col("props") if "props" in foreign.columns
-        else F.lit(None).cast("map<string,double>")
-    )
+    """Driver-side foreign set of :func:`intersect_join_broadcast`, in row
+    order (argmax tie parity requires the order).  More than
+    :data:`MAX_BROADCAST_POLYS` rows raise ``ValueError``."""
     rows = foreign.select(
-        "row_idx", "tile_id", "geometry_wkb", "minx", "miny", "maxx", "maxy",
-        props_col.alias("props"),
-    ).orderBy("row_idx").collect()
-    out = []
-    for i, r in enumerate(rows):
-        out.append(
-            {
-                "idx": i,
-                "id": r["tile_id"],
-                "ring": geom.wkb_to_polygon(bytes(r["geometry_wkb"])),
-                "bounds": (r["minx"], r["miny"], r["maxx"], r["maxy"]),
-                "props": dict(r["props"]) if r["props"] is not None else {},
-            }
+        "row_idx", "tile_id", "geometry_wkb", *_BOUNDS
+    ).orderBy("row_idx").limit(MAX_BROADCAST_POLYS + 1).collect()
+    if len(rows) > MAX_BROADCAST_POLYS:
+        raise ValueError(
+            f"collect_foreign: more than {MAX_BROADCAST_POLYS} foreign polygons "
+            "to collect for the reference join; use intersect_join_cells"
         )
-    return out
+    return [
+        {
+            "id": r["tile_id"],
+            "ring": geom.wkb_to_polygon(bytes(r["geometry_wkb"])),
+            "bounds": (r["minx"], r["miny"], r["maxx"], r["maxy"]),
+        }
+        for r in rows
+    ]
 
 
 def _area_matrix(fset: list[dict], bx0, by0, bx1, by1) -> np.ndarray:
@@ -107,21 +115,16 @@ def _area_matrix(fset: list[dict], bx0, by0, bx1, by1) -> np.ndarray:
 
 
 def _touch_fallback(fset, x0, y0, x1, y1) -> str | None:
-    """Reference parity for the all-zero-area case: first foreign whose
-    geometry *touches* the tile box (shapely intersects includes touch)."""
-    tile_ring = geom.box_ring(x0, y0, x1, y1)
+    """Reference parity for the all-zero-area case: the first foreign, in
+    row order, that :func:`_touches` the tile box."""
     for f in fset:
         fx0, fy0, fx1, fy1 = f["bounds"]
         if fx1 < x0 or fx0 > x1 or fy1 < y0 or fy0 > y1:
             continue
-        if geom.convex_intersects(tile_ring, f["ring"]):
+        if _touches(f["ring"], x0, y0, x1, y1):
             return f["id"]
     return None
 
-
-# --------------------------------------------------------------------------
-# broadcast-refine strategy
-# --------------------------------------------------------------------------
 
 _J1_SCHEMA = T.StructType(
     [
@@ -130,17 +133,11 @@ _J1_SCHEMA = T.StructType(
     ]
 )
 
-_J2_SCHEMA = T.StructType(
-    [
-        T.StructField("tile_id", T.StringType()),
-        T.StructField("foreign_id", T.StringType()),
-        T.StructField("props_at_foreign", T.MapType(T.StringType(), T.DoubleType())),
-    ]
-)
-
 
 def intersect_join_broadcast(tiles: DataFrame, foreign: DataFrame) -> DataFrame:
-    """J1 via broadcast-refine: (tile_id, foreign_id) with '-1' sentinel.
+    """The reference J1, by broadcast-refine: (tile_id, foreign_id) with
+    '-1' sentinel.  No engine path calls it: it is what the engine's
+    :func:`intersect_join_cells` is checked against.
 
     Tiles are treated as their bounding boxes — exact for grid tiles, whose
     geometry is an axis-aligned lon/lat box (``cmds.py:344-357``).
@@ -173,76 +170,9 @@ def intersect_join_broadcast(tiles: DataFrame, foreign: DataFrame) -> DataFrame:
     ).mapInPandas(run, _J1_SCHEMA)
 
 
-def foreign_proportions_broadcast(tiles: DataFrame, foreign: DataFrame) -> DataFrame:
-    """J2 via broadcast-refine: (tile_id, foreign_id, props_at_foreign)."""
-    fset = collect_foreign(foreign)
-    spark = tiles.sparkSession
-    # per-class matrix for the weighted sum: classes x foreign
-    classes = sorted({k for f in fset for k in f["props"]})
-    cmat = np.zeros((len(classes), len(fset)), dtype=np.float64)
-    for fi, f in enumerate(fset):
-        for ci, c in enumerate(classes):
-            cmat[ci, fi] = f["props"].get(c, 0.0)
-    # mask of present keys (reference NaN-skip: absent key contributes 0 but
-    # the sum over an all-absent key yields 0.0 -> identical to dense 0 fill)
-    b = spark.sparkContext.broadcast((fset, classes, cmat))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fs, cls, cm = b.value
-        fids = np.array([f["id"] for f in fs], dtype=object)
-        for pdf in batches:
-            bx0 = pdf["minx"].to_numpy()
-            by0 = pdf["miny"].to_numpy()
-            bx1 = pdf["maxx"].to_numpy()
-            by1 = pdf["maxy"].to_numpy()
-            areas = _area_matrix(fs, bx0, by0, bx1, by1)  # (F, N)
-            tot = areas.sum(axis=0)
-            rows = []
-            for i, tile_id in enumerate(pdf["tile_id"]):
-                if tot[i] > 0:
-                    w = areas[:, i] / tot[i]
-                    vec = cm @ w  # (C,)
-                    # reference keys: union of keys over *relevant* foreigns
-                    rel = areas[:, i] > 0
-                    keys = {k for fi in np.nonzero(rel)[0] for k in fs[fi]["props"]}
-                    props = {
-                        c: float(vec[ci]) for ci, c in enumerate(cls) if c in keys
-                    }
-                    fid = fids[int(np.argmax(w))]
-                    rows.append(
-                        {"tile_id": tile_id, "foreign_id": fid, "props_at_foreign": props}
-                    )
-                else:
-                    t = _touch_fallback(fs, bx0[i], by0[i], bx1[i], by1[i])
-                    rows.append(
-                        {
-                            "tile_id": tile_id,
-                            "foreign_id": t if t is not None else "-1",
-                            "props_at_foreign": {},
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return tiles.select(
-        "tile_id", "minx", "miny", "maxx", "maxy"
-    ).mapInPandas(run, _J2_SCHEMA)
-
-
 # --------------------------------------------------------------------------
-# cell-join strategy (scale path)
+# cell join: the engine's tile-vs-footprint join
 # --------------------------------------------------------------------------
-
-_PAIR_REFINE_SCHEMA = T.StructType(
-    [
-        T.StructField("tile_id", T.StringType()),
-        T.StructField("foreign_idx", T.LongType()),
-        T.StructField("foreign_id", T.StringType()),
-        T.StructField("inter_area", T.DoubleType()),
-    ]
-)
-
-
-_BOUNDS = ["minx", "miny", "maxx", "maxy"]
 
 
 def _cell_ix(c: str, level: int, offset: float) -> str:
@@ -404,167 +334,135 @@ def _tile_boxes(pdf: pd.DataFrame) -> list[np.ndarray]:
     return [pdf["t_" + c].to_numpy() for c in _BOUNDS]
 
 
-def _pair_areas(pdf: pd.DataFrame, groups: list) -> np.ndarray:
+def _pair_areas(pdf: pd.DataFrame, groups: list) -> tuple[np.ndarray, np.ndarray]:
     """Exact intersection area of each row's tile box with its foreign
-    ring (0 for a row that pairs with no foreign)."""
+    ring, and whether the two meet: a positive area, or a zero area that
+    :func:`_touches`.  A row with no foreign, or a null ring, has area 0
+    and meets nothing."""
     boxes = _tile_boxes(pdf)
     areas = np.zeros(len(pdf), dtype=np.float64)
+    meets = np.zeros(len(pdf), dtype=bool)
     for idx, ring in groups:
-        areas[idx] = geom.clip_areas_ring_boxes_exact(ring, *(b[idx] for b in boxes))
-    return areas
+        if ring is None:
+            continue
+        a = geom.clip_areas_ring_boxes_exact(ring, *(b[idx] for b in boxes))
+        areas[idx] = a
+        meets[idx] = a > 0
+        for i in idx[a == 0]:
+            meets[i] = _touches(ring, *(b[i] for b in boxes))
+    return areas, meets
 
 
-# the foreign side of J1/J2's cell join: key and carried ring, as
-# :func:`_cell_pairs` takes them
+# the foreign side of J1/J2's cell join: key and carried columns, as
+# :func:`_cell_pairs` takes them; J2 also carries ``props``
 _FOREIGN_SIDE = (
     "tile_id AS foreign_id", ["row_idx AS foreign_idx", "geometry_wkb AS foreign_wkb"]
 )
 
 
-def spatial_pairs_cell_join(
-    tiles: DataFrame, foreign: DataFrame, level: int | None = None
+def _tile_pass(
+    tiles: DataFrame, foreign: DataFrame, level: int | None, props: bool
 ) -> DataFrame:
-    """Candidate (tile, foreign) pairs (:func:`_cell_pairs`) + exact area
-    refine.
-
-    Output: (tile_id, foreign_idx, foreign_id, inter_area) for overlapping
-    pairs (inter_area > 0).  The tile side carries its bounds through the
-    join so no post-join geometry lookup is needed.  Tile geometries are
-    treated as their bounding boxes (exact for grid tiles).
-    """
-    level = level or choose_level(foreign)
-    pairs = _cell_pairs(tiles, foreign, *_FOREIGN_SIDE, level)
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf, groups in _ring_groups(batches, "foreign_id", "foreign_wkb"):
-            areas = _pair_areas(pdf, groups)
-            keep = areas > 0
-            out = pdf.loc[keep, ["tile_id", "foreign_idx", "foreign_id"]].copy()
-            out["inter_area"] = areas[keep]
-            yield out
-
-    return pairs.mapInPandas(refine, _PAIR_REFINE_SCHEMA)
-
-
-def intersect_join_cells(
-    tiles: DataFrame, foreign: DataFrame, level: int | None = None
-) -> DataFrame:
-    """J1 via cell join, in one shuffle-free pass: (tile_id, foreign_id)
-    per tile row, the foreign id of the max intersection area (ties: first
-    in foreign row order, then the larger id, as :func:`_argmax_foreign`),
-    '-1' for a tile that overlaps no foreign with positive area (a null or
-    NaN bound overlaps nothing).
+    """J1, and with ``props`` J2, in one shuffle-free pass.
 
     Each tile row gets a row key, explodes with ``explode_outer`` and
     left-outer broadcast-joins the foreign cells (:func:`_cell_pairs`), so
     every tile row reaches the refine.  A local sort on the row key (no
     exchange: the tile side never moves) makes each tile's rows
-    contiguous, and one ``mapInPandas`` computes the exact areas and takes
-    the argmax as the rows stream by.  Its state is at most one tile: the
-    rows of the last tile of an Arrow batch, which the next batch may
-    continue.  Duplicate tile rows each keep their own output row.
+    contiguous, and one ``mapInPandas`` computes the exact areas and each
+    tile's result (:func:`_tile_results`) as the rows stream by.  Its
+    state is at most one tile: the rows of the last tile of an Arrow
+    batch, which the next batch may continue.  Duplicate tile rows each
+    keep their own output row.
     """
     level = level or choose_level(foreign)
+    key, carry = _FOREIGN_SIDE
     pairs = _cell_pairs(
         tiles.withColumn("tile_row", F.expr("monotonically_increasing_id()")),
-        foreign, *_FOREIGN_SIDE, level, how="left", tile_carry=("tile_row",),
+        foreign, key, [*carry, "props AS foreign_props"] if props else carry,
+        level, how="left", tile_carry=("tile_row",),
     )
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         held = None  # the last tile's rows: the next batch may continue it
         for pdf, groups in _ring_groups(batches, "foreign_id", "foreign_wkb"):
-            pdf = pdf.assign(area=_pair_areas(pdf, groups))
+            area, meets = _pair_areas(pdf, groups)
+            pdf = pdf.assign(area=area, meets=meets)
             if held is not None:
                 pdf = pd.concat([held, pdf], ignore_index=True)
             last = pdf["tile_row"].to_numpy() == pdf["tile_row"].iloc[-1]
             held = pdf[last]
             if not last.all():
-                yield _argmax_rows(pdf[~last])
+                yield _tile_results(pdf[~last], props)
         if held is not None:
-            yield _argmax_rows(held)
+            yield _tile_results(held, props)
 
-    return pairs.sortWithinPartitions(pairs["tile_row"]).mapInPandas(refine, _J1_SCHEMA)
+    schema = (
+        "tile_id string, foreign_id string, props_at_foreign map<string,double>"
+        if props else _J1_SCHEMA
+    )
+    return pairs.sortWithinPartitions(pairs["tile_row"]).mapInPandas(refine, schema)
 
 
-def _argmax_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-    """(tile_id, foreign_id) per ``tile_row`` of complete tiles' candidate
-    rows: the max ``area`` > 0, then the min ``foreign_idx``, then the max
-    ``foreign_id`` — :func:`_argmax_foreign`'s order — else '-1'."""
-    hit = pdf[pdf["area"] > 0].sort_values(
+def _tile_results(pdf: pd.DataFrame, props: bool) -> pd.DataFrame:
+    """(tile_id, foreign_id[, props_at_foreign]) per ``tile_row`` of
+    complete tiles' candidate rows.
+
+    The foreign id is that of the met row with the max ``area``, then the
+    min ``foreign_idx``, then the max ``foreign_id``, else '-1': a tile met
+    only by touch gets its first toucher.  The props are
+    ``Σ w_i · props_i[k]`` over the rows of positive area,
+    ``w_i = area_i / Σ area``, a missing key counting 0, keys sorted;
+    ``{}`` when no area is positive."""
+    met = pdf[pdf["meets"]].sort_values(
         ["tile_row", "area", "foreign_idx", "foreign_id"],
         ascending=[True, False, True, False],
     )
-    best = hit.drop_duplicates("tile_row").set_index("tile_row")["foreign_id"]
+    best = met.drop_duplicates("tile_row").set_index("tile_row")["foreign_id"]
     rows = pdf.drop_duplicates("tile_row")
-    return pd.DataFrame(
+    out = pd.DataFrame(
         {
             "tile_id": rows["tile_id"].to_numpy(),
             "foreign_id": rows["tile_row"].map(best).fillna("-1").to_numpy(),
         }
     )
+    if props:
+        # summed in foreign row order; a null props map counts as {}
+        pos = pdf[pdf["area"] > 0].sort_values(["tile_row", "foreign_idx"])
+        w = pos["area"] / pos.groupby("tile_row")["area"].transform("sum")
+        mix: dict = {}
+        for row, wi, p in zip(pos["tile_row"], w, pos["foreign_props"]):
+            acc = mix.setdefault(row, {})
+            for k, v in (p or {}).items():
+                acc[k] = acc.get(k, 0.0) + wi * v
+        out["props_at_foreign"] = [
+            dict(sorted(mix.get(row, {}).items())) for row in rows["tile_row"]
+        ]
+    return out
 
 
-def _argmax_foreign(pairs: DataFrame) -> DataFrame:
-    """(tile_id, foreign_id) of the max inter_area, first-max in foreign row
-    order on ties — as a PARTIALLY AGGREGATABLE struct-max instead of a
-    row_number window: lexicographic max of (area, -idx, id) gives the same
-    winner with a map-side combine and no per-tile sort (the window form
-    shuffles every pair and sorts each tile group; at 10^12 pairs the
-    partial agg reduces shuffle volume to one row per (task, tile))."""
-    return pairs.groupBy("tile_id").agg(
-        F.max(
-            F.struct(
-                F.col("inter_area"),
-                (-F.col("foreign_idx")).alias("neg_idx"),
-                F.col("foreign_id"),
-            )
-        ).alias("best")
-    ).select("tile_id", F.col("best.foreign_id").alias("foreign_id"))
+def intersect_join_cells(
+    tiles: DataFrame, foreign: DataFrame, level: int | None = None
+) -> DataFrame:
+    """J1 via cell join, in one shuffle-free pass (:func:`_tile_pass`):
+    (tile_id, foreign_id) per tile row, the foreign id of the max
+    intersection area (ties: first in foreign row order, then the larger
+    id), the first toucher in foreign row order for a tile that only
+    touches foreigns, '-1' for a tile that meets none (a null or NaN bound
+    meets nothing)."""
+    return _tile_pass(tiles, foreign, level, props=False)
 
 
 def foreign_proportions_cells(
     tiles: DataFrame, foreign: DataFrame, level: int | None = None
 ) -> DataFrame:
-    """J2 via cell join: explode props, weight by inter_area / Σ, re-aggregate
-    to a map.  Argmax id as in J1."""
-    # persist: consumed by the weight window, the explode-agg and the argmax
-    pairs = cache.track(spatial_pairs_cell_join(tiles, foreign, level))
-    fprops = foreign.select(F.col("tile_id").alias("foreign_id"), "props")
-    with_props = pairs.join(F.broadcast(fprops), "foreign_id")
-
-    wsum = Window.partitionBy("tile_id")
-    weighted = with_props.withColumn(
-        "w", F.col("inter_area") / F.sum("inter_area").over(wsum)
-    )
-
-    exploded = weighted.select(
-        "tile_id", "w", F.explode("props").alias("class", "frac")
-    )
-    agg = (
-        exploded.groupBy("tile_id", "class")
-        .agg(F.sum(F.col("w") * F.col("frac")).alias("wfrac"))
-        .groupBy("tile_id")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("class", "wfrac")))
-            ).alias("props_at_foreign")
-        )
-    )
-
-    best = _argmax_foreign(pairs)
-    out = (
-        tiles.select("tile_id")
-        .join(best, "tile_id", "left")
-        .join(agg, "tile_id", "left")
-        .fillna({"foreign_id": "-1"})
-    )
-    return out.withColumn(
-        "props_at_foreign",
-        F.coalesce(
-            "props_at_foreign",
-            F.create_map().cast("map<string,double>"),
-        ),
-    )
+    """J2 via cell join, in J1's one pass (:func:`_tile_pass`):
+    (tile_id, foreign_id, props_at_foreign) per tile row.  ``foreign``
+    carries ``props`` (``map<string,double>``), which ride the broadcast
+    side of the join; ``props_at_foreign`` is the area-weighted mean of
+    the overlapping foreigns' props (:func:`_tile_results`), and
+    ``foreign_id`` is J1's."""
+    return _tile_pass(tiles, foreign, level, props=True)
 
 
 # --------------------------------------------------------------------------
@@ -593,11 +491,6 @@ def aoi_filter(tiles: DataFrame, aoi_ring: np.ndarray) -> DataFrame:
 # --------------------------------------------------------------------------
 # point-in-polygon join
 # --------------------------------------------------------------------------
-
-# the broadcast path collects every ring to the driver: past this many
-# polygons it refuses (the shuffle path, broadcast_polys=False, has no cap)
-MAX_BROADCAST_POLYS = 100_000
-
 
 def point_in_polygon_join(
     points: DataFrame,

@@ -132,7 +132,7 @@ def cmd_intersect(
 ) -> str:
     tiles = cat.read(spark, f"tiles_{tiles_name}")
     foreign = cat.read(spark, f"tiles_{foreign_name}")
-    j1 = joins.intersect_join_broadcast(tiles, foreign)
+    j1 = joins.intersect_join_cells(tiles, foreign)
     return _merge_column(
         spark, cat, f"tiles_{tiles_name}",
         j1.select("tile_id", F.col("foreign_id").alias(f"foreignid_{foreign_name}")),
@@ -148,7 +148,7 @@ def cmd_lp_from_foreign(
     foreign = cat.read(spark, f"tiles_{foreign_name}").withColumnRenamed(
         f"{labels_dataset}_proportions", "props"
     )
-    j2 = joins.foreign_proportions_broadcast(tiles, foreign)
+    j2 = joins.foreign_proportions_cells(tiles, foreign)
     pcol = f"{labels_dataset}_proportions_at_{foreign_name}"
     return _merge_column(
         spark, cat, f"tiles_{tiles_name}",

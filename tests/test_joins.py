@@ -1,9 +1,11 @@
 """The cell index of the tile-vs-footprint joins (``operators/joins.py``):
 the codegen cover and point cell ids equal the numpy kernels of
 :mod:`geetiles_spark.geo.cells`, a null or NaN bbox bound or point matches
-nothing instead of failing the join or landing in the corner cell, J1's
-one-pass refine keeps the argmax rule, and ``make_grid`` returns its
-persisted tile set."""
+nothing instead of failing the join or landing in the corner cell, J1 and
+J2's one-pass refine keeps the argmax, touch and weighted-props rules, the
+reference J1 agrees and refuses past its collect bound, ``make_grid``
+returns its persisted tile set, and the point-in-polygon and interval
+joins' strategies agree."""
 
 import numpy as np
 import pandas as pd
@@ -283,7 +285,7 @@ def test_knn_cells_ignores_null_or_nan_points(spark):
 
 
 # ---------------------------------------------------------------------------
-# J1 in one pass: left-outer cell join + streaming argmax refine
+# J1 and J2 in one pass: left-outer cell join + streaming per-tile refine
 # ---------------------------------------------------------------------------
 
 
@@ -296,9 +298,9 @@ def _j1_tiles() -> pd.DataFrame:
     rows = [
         ("tie", 0.0, 0.0, 2.0, 2.0),  # two equal overlaps: f3 (idx 3) beats fz (idx 5)
         ("none", 10.0, 0.0, 11.0, 1.0),  # overlaps nothing
-        ("touch", 10.0, 10.0, 11.0, 11.0),  # an edge touch only: zero area
+        ("touch", 10.0, 10.0, 11.0, 11.0),  # edge touches only: the first toucher, ft
         ("big", 4.0, 4.0, 9.0, 9.0),  # many candidates, split across batches
-        ("dup", 5.0, 0.0, 6.0, 1.0),
+        ("dup", 5.0, 0.0, 6.0, 1.0),  # overlaps fd, touches fe
         ("dup", 5.0, 0.0, 6.0, 1.0),  # a duplicate row keeps its own row
         ("tnull", None, 0.0, 1.0, 1.0),
         ("tnan", 0.0, nan, 1.0, 1.0),
@@ -308,54 +310,99 @@ def _j1_tiles() -> pd.DataFrame:
 
 def _j1_foreign() -> pd.DataFrame:
     boxes = [
-        (0, "fx", 4.5, 4.5, 5.5, 5.5),
-        (3, "f3", -1.0, 0.0, 1.0, 2.0),
-        (5, "fz", 1.0, 0.0, 3.0, 2.0),
-        (6, "ft", 11.0, 10.0, 12.0, 11.0),
-        (7, "fd", 5.5, -1.0, 7.0, 0.5),
-        (8, "fb1", 5.0, 5.0, 7.0, 7.5),
-        (9, "fb2", 6.0, 4.0, 8.5, 8.5),
-        (10, "fb3", 3.0, 8.0, 9.5, 9.5),
+        (0, "fx", {"a": 1.0}, 4.5, 4.5, 5.5, 5.5),
+        (1, "fe", {"z": 1.0}, 6.0, 0.0, 6.5, 1.0),  # a toucher's keys stay out
+        (3, "f3", {"c": 1.0}, -1.0, 0.0, 1.0, 2.0),
+        (5, "fz", {"c": 0.25, "d": 0.75}, 1.0, 0.0, 3.0, 2.0),
+        (6, "ft", {"t": 1.0}, 11.0, 10.0, 12.0, 11.0),
+        (7, "fd", {"e": 1.0}, 5.5, -1.0, 7.0, 0.5),
+        (8, "fb1", {"a": 0.5, "b": 0.5}, 5.0, 5.0, 7.0, 7.5),
+        (9, "fb2", {"b": 1.0}, 6.0, 4.0, 8.5, 8.5),
+        (10, "fb3", None, 3.0, 8.0, 9.5, 9.5),  # a null props map
+        (11, "fa", {"t": 1.0}, 10.0, 11.0, 10.5, 11.5),  # a later toucher
     ]
     return pd.DataFrame(
         [{"row_idx": i, "tile_id": f, "geometry_wkb": _box_wkb(*b),
-          **dict(zip(_BOUNDS, b))} for i, f, *b in boxes]
+          **dict(zip(_BOUNDS, b)), "props": p} for i, f, p, *b in boxes]
     )
 
 
 def _j1_oracle(tiles: pd.DataFrame, foreign: pd.DataFrame) -> list:
-    """Per tile row: the max positive exact area, then the lowest foreign
-    row_idx, then the largest id; '-1' when no area is positive."""
+    """Per tile row: (tile_id, foreign_id, props).  The foreign id is that
+    of the max positive exact area, then the lowest foreign row_idx, then
+    the largest id; with no positive area, the lowest-row_idx foreign whose
+    ring touches the box; else '-1'.  The props are the area-weighted sum
+    over the positive-area foreigns, a missing key counting 0."""
     out = []
     for t in tiles.itertuples():
         box = [np.array([getattr(t, c)], dtype=np.float64) for c in _BOUNDS]
-        best = None
+        best, hits = None, []
         if all(np.isfinite(b[0]) for b in box):
-            for f in foreign.itertuples():
-                a = geom.clip_areas_ring_boxes_exact(
-                    geom.wkb_to_polygon(f.geometry_wkb), *box
-                )[0]
-                if a > 0 and (best is None or (a, -f.row_idx, f.tile_id) > best):
-                    best = (a, -f.row_idx, f.tile_id)
-        out.append((t.tile_id, best[2] if best else "-1"))
-    return sorted(out)
+            for f in foreign.sort_values("row_idx").itertuples():
+                if f.geometry_wkb is None:  # a null ring meets nothing
+                    continue
+                ring = geom.wkb_to_polygon(f.geometry_wkb)
+                a = geom.clip_areas_ring_boxes_exact(ring, *box)[0]
+                if a > 0:
+                    hits.append((a, f.props or {}))
+                    if best is None or (a, -f.row_idx, f.tile_id) > best:
+                        best = (a, -f.row_idx, f.tile_id)
+                elif not hits and best is None and geom.convex_intersects(
+                    geom.box_ring(*(b[0] for b in box)), ring
+                ):
+                    best = (0.0, -f.row_idx, f.tile_id)
+        total = sum(a for a, _ in hits)
+        props = {}
+        for a, p in hits:
+            for k, v in p.items():
+                props[k] = props.get(k, 0.0) + a / total * v
+        out.append((t.tile_id, best[2] if best else "-1", props))
+    return sorted(out, key=lambda r: (r[0], r[1]))
 
 
 _J1_TILE_SCHEMA = "tile_id string, minx double, miny double, maxx double, maxy double"
 _J1_FOREIGN_SCHEMA = (
     "row_idx long, tile_id string, geometry_wkb binary, "
-    "minx double, miny double, maxx double, maxy double"
+    "minx double, miny double, maxx double, maxy double, props map<string,double>"
 )
+_ONE_PASS = [joins.intersect_join_cells, joins.foreign_proportions_cells]
+
+
+def _assert_matches_oracle(df, want) -> None:
+    """J1 rows against the oracle's ids; J2 rows also against its props,
+    the map's keys in sorted order."""
+    if "props_at_foreign" not in df.columns:
+        assert sorted((r["tile_id"], r["foreign_id"]) for r in df.collect()) == [
+            w[:2] for w in want]
+        return
+    got = sorted(
+        ((r["tile_id"], r["foreign_id"], r["props_at_foreign"], r["keys"])
+         for r in df.withColumn("keys", F.map_keys("props_at_foreign")).collect()),
+        key=lambda r: r[:2],
+    )
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    for (tid, _, props, keys), (_, _, wprops) in zip(got, want):
+        assert keys == sorted(wprops), tid
+        assert props == pytest.approx(wprops, abs=1e-12), tid
 
 
 @pytest.mark.parametrize("level", [3, 8])
 @pytest.mark.parametrize("batch_rows", [None, 2])
 def test_intersect_join_cells_one_pass(spark, level, batch_rows):
-    tiles_pdf, foreign_pdf = _j1_tiles(), _j1_foreign()
+    """J1 and J2 share the pass: each against the per-row oracle."""
+    tiles_pdf = _j1_tiles()
+    # a null ring over the "none" tile's box: it reaches the refine, meets nothing
+    null_ring = {"row_idx": 2, "tile_id": "fn", "geometry_wkb": None, "props": {"n": 1.0},
+                 **dict(zip(_BOUNDS, (10.2, 0.2, 10.8, 0.8)))}
+    foreign_pdf = pd.concat([_j1_foreign(), pd.DataFrame([null_ring])], ignore_index=True)
     want = _j1_oracle(tiles_pdf, foreign_pdf)
-    assert dict(want)["tie"] == "f3" and dict(want)["big"] == "fb2"
-    assert {t: f for t, f in want if t in ("none", "touch", "tnull", "tnan")} == {
-        "none": "-1", "touch": "-1", "tnull": "-1", "tnan": "-1"}
+    wid = {t: f for t, f, _ in want}
+    assert wid["tie"] == "f3" and wid["big"] == "fb2" and wid["dup"] == "fd"
+    assert {t: wid[t] for t in ("none", "touch", "tnull", "tnan")} == {
+        "none": "-1", "touch": "ft", "tnull": "-1", "tnan": "-1"}
+    wprops = {t: p for t, _, p in want}
+    assert wprops["touch"] == {} and wprops["dup"] == {"e": 1.0}
+    assert sorted(wprops["big"]) == ["a", "b"]
     tiles = spark.createDataFrame(tiles_pdf, _J1_TILE_SCHEMA).repartition(2)
     foreign = spark.createDataFrame(foreign_pdf, _J1_FOREIGN_SCHEMA)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -363,33 +410,57 @@ def test_intersect_join_cells_one_pass(spark, level, batch_rows):
     if batch_rows is not None:
         spark.conf.set(key, str(batch_rows))
     try:
-        got = joins.intersect_join_cells(tiles, foreign, level).collect()
+        for op in _ONE_PASS:
+            _assert_matches_oracle(op(tiles, foreign, level), want)
     finally:
         spark.conf.set(key, old)
+
+
+def test_reference_j1_matches_oracle(spark):
+    """The reference J1 takes the same touch rule as the cell pass."""
+    tiles_pdf = _j1_tiles().dropna()
+    want = [w[:2] for w in _j1_oracle(tiles_pdf, _j1_foreign())]
+    assert ("touch", "ft") in want
+    tiles = spark.createDataFrame(tiles_pdf, _J1_TILE_SCHEMA)
+    foreign = spark.createDataFrame(_j1_foreign(), _J1_FOREIGN_SCHEMA)
+    got = joins.intersect_join_broadcast(tiles, foreign).collect()
     assert sorted((r["tile_id"], r["foreign_id"]) for r in got) == want
+
+
+def test_reference_j1_refuses_past_cap(spark, monkeypatch):
+    """The reference J1's driver collect fails loudly past
+    MAX_BROADCAST_POLYS instead of pulling an unbounded relation."""
+    tiles = spark.createDataFrame(_j1_tiles(), _J1_TILE_SCHEMA)
+    foreign = spark.createDataFrame(_j1_foreign(), _J1_FOREIGN_SCHEMA)
+    monkeypatch.setattr(joins, "MAX_BROADCAST_POLYS", 3)
+    with pytest.raises(ValueError, match="intersect_join_cells"):
+        joins.intersect_join_broadcast(tiles, foreign)
+    assert joins.intersect_join_cells(tiles, foreign, 6).count() == len(_j1_tiles())
 
 
 def test_intersect_join_cells_empty_foreign(spark):
     tiles = spark.createDataFrame(_j1_tiles(), _J1_TILE_SCHEMA)
     foreign = spark.createDataFrame([], _J1_FOREIGN_SCHEMA)
-    got = joins.intersect_join_cells(tiles, foreign, 6).collect()
-    assert sorted(r["tile_id"] for r in got) == sorted(_j1_tiles()["tile_id"])
-    assert {r["foreign_id"] for r in got} == {"-1"}
+    for op in _ONE_PASS:
+        got = op(tiles, foreign, 6).collect()
+        assert sorted(r["tile_id"] for r in got) == sorted(_j1_tiles()["tile_id"])
+        assert {r["foreign_id"] for r in got} == {"-1"}
+    got = joins.foreign_proportions_cells(tiles, foreign, 6).collect()
+    assert all(r["props_at_foreign"] == {} for r in got)
 
 
 def test_intersect_join_cells_plan_is_one_shuffle_free_pass(spark):
+    """J1 and J2: one refine, no hash exchange, no persist."""
     import re
 
     tiles = spark.createDataFrame(_j1_tiles(), _J1_TILE_SCHEMA)
     foreign = spark.createDataFrame(_j1_foreign(), _J1_FOREIGN_SCHEMA)
-    plan = (
-        joins.intersect_join_cells(tiles, foreign, 6)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
-    assert "hashpartitioning" not in plan, plan
-    assert "InMemory" not in plan, plan
-    assert len(re.findall(r"BroadcastHashJoin \[cell", plan)) == 1, plan
+    for op in _ONE_PASS:
+        plan = op(tiles, foreign, 6)._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+        assert "hashpartitioning" not in plan, plan
+        assert "InMemory" not in plan, plan
+        assert len(re.findall(r"BroadcastHashJoin \[cell", plan)) == 1, plan
 
 
 # ---------------------------------------------------------------------------
@@ -414,3 +485,198 @@ def test_make_grid_returns_the_persisted_tile_set(spark, aoi_box):
             root = tiles._jdf.queryExecution().executedPlan()
             assert root.nodeName() == "InMemoryTableScan", root.toString()
             assert "area_km2" in root.toString()
+
+
+# ---------------------------------------------------------------------------
+# strategy twins: point-in-polygon and interval-spatial joins
+# ---------------------------------------------------------------------------
+
+
+class TestPipJoinStrategies:
+    def _inputs(self, spark):
+        rng = np.random.default_rng(11)
+        pts = pd.DataFrame(
+            {
+                "point_id": np.arange(300, dtype=np.int64),
+                "lon": rng.uniform(-0.5, 5.0, 300),
+                "lat": rng.uniform(-0.5, 5.0, 300),
+            }
+        )
+        # concave L-shape + boxes: the refine must be a real PIP test, not
+        # just the bbox prefilter
+        lshape = np.array(
+            [[0.0, 0.0], [4.0, 0.0], [4.0, 0.9], [1.0, 0.9], [1.0, 4.0], [0.0, 4.0]]
+        )
+        rows = [
+            {
+                "tile_id": "L",
+                "geometry_wkb": geom.polygon_to_wkb(geom.ring_close(lshape)),
+                "minx": 0.0, "miny": 0.0, "maxx": 4.0, "maxy": 4.0,
+            }
+        ]
+        for i, (x0, y0) in enumerate([(2.0, 2.0), (3.5, 3.5), (-0.4, -0.4)]):
+            rows.append(
+                {
+                    "tile_id": f"B{i}",
+                    "geometry_wkb": geom.polygon_to_wkb(
+                        geom.box_ring(x0, y0, x0 + 1.2, y0 + 1.2)
+                    ),
+                    "minx": x0, "miny": y0, "maxx": x0 + 1.2, "maxy": y0 + 1.2,
+                }
+            )
+        return spark.createDataFrame(pts), spark.createDataFrame(pd.DataFrame(rows)), pts, rows
+
+    def test_shuffle_twin_matches_broadcast(self, spark):
+        """VERDICT r3 #1: broadcast and cell-shuffle strategies must be
+        result-identical, and both must match the direct numpy PIP oracle."""
+        points, polys, pts_pdf, poly_rows = self._inputs(spark)
+        a = {
+            (r["point_id"], r["tile_id"])
+            for r in joins.point_in_polygon_join(points, polys).collect()
+        }
+        b = {
+            (r["point_id"], r["tile_id"])
+            for r in joins.point_in_polygon_join(
+                points, polys, broadcast_polys=False
+            ).collect()
+        }
+        xy = np.stack([pts_pdf["lon"].to_numpy(), pts_pdf["lat"].to_numpy()], axis=1)
+        expect = set()
+        for row in poly_rows:
+            ring = geom.wkb_to_polygon(row["geometry_wkb"])
+            inside = geom.points_in_polygon(xy, ring)
+            for pid in pts_pdf["point_id"].to_numpy()[inside]:
+                expect.add((int(pid), row["tile_id"]))
+        assert a == expect and b == expect and len(expect) > 20
+
+    def test_shuffle_path_never_collects_polys(self, spark, monkeypatch):
+        """The scale path must not run any driver-side collect of the
+        polygon relation while BUILDING the plan, and the cell join must be
+        a shuffle join (rings travel with the exploded cells), not a
+        broadcast."""
+        import pyspark.sql.classic.dataframe as cdf
+
+        points, polys, _, _ = self._inputs(spark)
+
+        def boom(self, *a, **k):  # noqa: ANN001
+            raise AssertionError("driver collect during plan construction")
+
+        monkeypatch.setattr(cdf.DataFrame, "collect", boom)
+        df = joins.point_in_polygon_join(
+            points, polys, level=6, broadcast_polys=False
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ShuffledHashJoin" in plan
+        import re
+
+        assert not re.search(r"BroadcastHashJoin \[cell", plan)
+
+
+    def test_broadcast_path_refuses_past_cap(self, spark, monkeypatch):
+        """The broadcast path's driver collect fails loudly past
+        MAX_BROADCAST_POLYS instead of pulling an unbounded relation."""
+        points, polys, _, _ = self._inputs(spark)
+        monkeypatch.setattr(joins, "MAX_BROADCAST_POLYS", 3)
+        with pytest.raises(ValueError, match="broadcast_polys=False"):
+            joins.point_in_polygon_join(points, polys)
+        assert joins.point_in_polygon_join(
+            points, polys, broadcast_polys=False
+        ).count() > 0
+
+
+class TestIntervalSpatialStrategies:
+    """interval_spatial_join must match a brute-force numpy reference on
+    the triangle fixtures (non-rectangular footprints + a null-footprint
+    event + out-of-window events), and building its plan must not collect
+    the event relation to the driver."""
+
+    def _rows(self):
+        from geetiles_spark.functions.oracle_sql import event_triangles
+
+        rows = []
+        for e in event_triangles():
+            ring = np.array(e["verts"] + [e["verts"][0]], dtype=np.float64)
+            xs, ys = ring[:, 0], ring[:, 1]
+            rows.append(
+                {
+                    "event_id": e["event_id"],
+                    "minx": float(xs.min()), "miny": float(ys.min()),
+                    "maxx": float(xs.max()), "maxy": float(ys.max()),
+                    "start": e["start"], "end": e["end"],
+                    "geometry_wkb": bytes(geom.polygon_to_wkb(ring)),
+                }
+            )
+        # null footprint in-window (bbox-exact refine) straddling boxes
+        rows.append(
+            {
+                "event_id": 100, "minx": 1.5, "miny": 1.5,
+                "maxx": 4.5, "maxy": 2.5,
+                "start": "2020-02-01", "end": "2020-03-01",
+                "geometry_wkb": None,
+            }
+        )
+        return rows
+
+    def _inputs(self, spark):
+        from __spark_entry__ import _boxes_pdf
+
+        polys = spark.createDataFrame(_boxes_pdf())
+        ev = spark.createDataFrame(pd.DataFrame(self._rows()))
+        return polys, ev
+
+    @staticmethod
+    def _reference(boxes, rows, start, end):
+        """Every tile x in-window event: the exact box-vs-ring test, or the
+        bbox test for a null footprint."""
+        bx = [boxes[c].to_numpy() for c in ("minx", "miny", "maxx", "maxy")]
+        out = set()
+        for e in rows:
+            if not (e["start"] >= start and e["end"] <= end):
+                continue
+            if e["geometry_wkb"] is None:
+                hit = (
+                    (bx[0] <= e["maxx"]) & (bx[2] >= e["minx"])
+                    & (bx[1] <= e["maxy"]) & (bx[3] >= e["miny"])
+                )
+            else:
+                hit = geom.boxes_intersect_polygon(
+                    *bx, geom.wkb_to_polygon(e["geometry_wkb"])
+                )
+            out |= {(t, e["event_id"]) for t in boxes["tile_id"][hit]}
+        return out
+
+    def test_matches_bruteforce_reference(self, spark):
+        from __spark_entry__ import _boxes_pdf
+
+        polys, ev = self._inputs(spark)
+        got = {
+            (r["tile_id"], r["event_id"])
+            for r in joins.interval_spatial_join(
+                polys, ev, "2020-01-01", "2020-12-31"
+            ).collect()
+        }
+        expect = self._reference(
+            _boxes_pdf(), self._rows(), "2020-01-01", "2020-12-31"
+        )
+        assert got == expect and len(got) > 25
+        # the null-footprint event matched via its bbox
+        assert any(eid == 100 for _, eid in got)
+        # out-of-window triangles (start 2019) excluded
+        from geetiles_spark.functions.oracle_sql import event_triangles
+
+        out_ids = {e["event_id"] for e in event_triangles() if e["start"] < "2020"}
+        assert not any(eid in out_ids for _, eid in got)
+
+    def test_never_collects_events(self, spark, monkeypatch):
+        import pyspark.sql.classic.dataframe as cdf
+
+        polys, ev = self._inputs(spark)
+
+        def boom(self, *a, **k):  # noqa: ANN001
+            raise AssertionError("driver collect during plan construction")
+
+        monkeypatch.setattr(cdf.DataFrame, "collect", boom)
+        df = joins.interval_spatial_join(
+            polys, ev, "2020-01-01", "2020-12-31", level=6,
+        )
+        df._jdf.queryExecution().executedPlan()

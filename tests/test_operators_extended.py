@@ -62,7 +62,7 @@ class TestAssemble:
             chipsrc.generate_chips(tiles_box, lbl_ds)
         )
         props = zonal.compute_proportions(tiles_box, chips, lbl_ds)
-        fj = joins.foreign_proportions_broadcast(tiles_box, foreign_box)
+        fj = joins.foreign_proportions_cells(tiles_box, foreign_box)
         sp = splitop.split(tiles_box, 8, 0.3, 0.5, 0.3, 0.2).select("tile_id", "split")
         ds = assemble.assemble_dataset(
             tiles_box, chips, img_ds, lbl_ds, props=props, foreign=fj, split_col=sp
@@ -1248,98 +1248,6 @@ class TestEmptyInputs:
         ).count() == 0
 
 
-class TestPipJoinStrategies:
-    def _inputs(self, spark):
-        rng = np.random.default_rng(11)
-        pts = pd.DataFrame(
-            {
-                "point_id": np.arange(300, dtype=np.int64),
-                "lon": rng.uniform(-0.5, 5.0, 300),
-                "lat": rng.uniform(-0.5, 5.0, 300),
-            }
-        )
-        # concave L-shape + boxes: the refine must be a real PIP test, not
-        # just the bbox prefilter
-        lshape = np.array(
-            [[0.0, 0.0], [4.0, 0.0], [4.0, 0.9], [1.0, 0.9], [1.0, 4.0], [0.0, 4.0]]
-        )
-        rows = [
-            {
-                "tile_id": "L",
-                "geometry_wkb": geom.polygon_to_wkb(geom.ring_close(lshape)),
-                "minx": 0.0, "miny": 0.0, "maxx": 4.0, "maxy": 4.0,
-            }
-        ]
-        for i, (x0, y0) in enumerate([(2.0, 2.0), (3.5, 3.5), (-0.4, -0.4)]):
-            rows.append(
-                {
-                    "tile_id": f"B{i}",
-                    "geometry_wkb": geom.polygon_to_wkb(
-                        geom.box_ring(x0, y0, x0 + 1.2, y0 + 1.2)
-                    ),
-                    "minx": x0, "miny": y0, "maxx": x0 + 1.2, "maxy": y0 + 1.2,
-                }
-            )
-        return spark.createDataFrame(pts), spark.createDataFrame(pd.DataFrame(rows)), pts, rows
-
-    def test_shuffle_twin_matches_broadcast(self, spark):
-        """VERDICT r3 #1: broadcast and cell-shuffle strategies must be
-        result-identical, and both must match the direct numpy PIP oracle."""
-        points, polys, pts_pdf, poly_rows = self._inputs(spark)
-        a = {
-            (r["point_id"], r["tile_id"])
-            for r in joins.point_in_polygon_join(points, polys).collect()
-        }
-        b = {
-            (r["point_id"], r["tile_id"])
-            for r in joins.point_in_polygon_join(
-                points, polys, broadcast_polys=False
-            ).collect()
-        }
-        xy = np.stack([pts_pdf["lon"].to_numpy(), pts_pdf["lat"].to_numpy()], axis=1)
-        expect = set()
-        for row in poly_rows:
-            ring = geom.wkb_to_polygon(row["geometry_wkb"])
-            inside = geom.points_in_polygon(xy, ring)
-            for pid in pts_pdf["point_id"].to_numpy()[inside]:
-                expect.add((int(pid), row["tile_id"]))
-        assert a == expect and b == expect and len(expect) > 20
-
-    def test_shuffle_path_never_collects_polys(self, spark, monkeypatch):
-        """The scale path must not run any driver-side collect of the
-        polygon relation while BUILDING the plan, and the cell join must be
-        a shuffle join (rings travel with the exploded cells), not a
-        broadcast."""
-        import pyspark.sql.classic.dataframe as cdf
-
-        points, polys, _, _ = self._inputs(spark)
-
-        def boom(self, *a, **k):  # noqa: ANN001
-            raise AssertionError("driver collect during plan construction")
-
-        monkeypatch.setattr(cdf.DataFrame, "collect", boom)
-        df = joins.point_in_polygon_join(
-            points, polys, level=6, broadcast_polys=False
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in plan
-        import re
-
-        assert not re.search(r"BroadcastHashJoin \[cell", plan)
-
-
-    def test_broadcast_path_refuses_past_cap(self, spark, monkeypatch):
-        """The broadcast path's driver collect fails loudly past
-        MAX_BROADCAST_POLYS instead of pulling an unbounded relation."""
-        points, polys, _, _ = self._inputs(spark)
-        monkeypatch.setattr(joins, "MAX_BROADCAST_POLYS", 3)
-        with pytest.raises(ValueError, match="broadcast_polys=False"):
-            joins.point_in_polygon_join(points, polys)
-        assert joins.point_in_polygon_join(
-            points, polys, broadcast_polys=False
-        ).count() > 0
-
-
 class TestSimhashSkew:
     def test_hot_segment_salted_exact(self, spark):
         """A corpus where one segment value is shared by most docs: the
@@ -1543,104 +1451,6 @@ class TestStratifiedSample:
         assert 0.15 * n <= len(s1) <= 0.25 * n  # ~fraction
         s3 = {r["doc_id"] for r in textop.stratified_sample(docs, 0.2, seed=8).collect()}
         assert s3 != s1  # seed changes the sample
-
-
-class TestIntervalSpatialStrategies:
-    """interval_spatial_join must match a brute-force numpy reference on
-    the triangle fixtures (non-rectangular footprints + a null-footprint
-    event + out-of-window events), and building its plan must not collect
-    the event relation to the driver."""
-
-    def _rows(self):
-        from geetiles_spark.functions.oracle_sql import event_triangles
-
-        rows = []
-        for e in event_triangles():
-            ring = np.array(e["verts"] + [e["verts"][0]], dtype=np.float64)
-            xs, ys = ring[:, 0], ring[:, 1]
-            rows.append(
-                {
-                    "event_id": e["event_id"],
-                    "minx": float(xs.min()), "miny": float(ys.min()),
-                    "maxx": float(xs.max()), "maxy": float(ys.max()),
-                    "start": e["start"], "end": e["end"],
-                    "geometry_wkb": bytes(geom.polygon_to_wkb(ring)),
-                }
-            )
-        # null footprint in-window (bbox-exact refine) straddling boxes
-        rows.append(
-            {
-                "event_id": 100, "minx": 1.5, "miny": 1.5,
-                "maxx": 4.5, "maxy": 2.5,
-                "start": "2020-02-01", "end": "2020-03-01",
-                "geometry_wkb": None,
-            }
-        )
-        return rows
-
-    def _inputs(self, spark):
-        from __spark_entry__ import _boxes_pdf
-
-        polys = spark.createDataFrame(_boxes_pdf())
-        ev = spark.createDataFrame(pd.DataFrame(self._rows()))
-        return polys, ev
-
-    @staticmethod
-    def _reference(boxes, rows, start, end):
-        """Every tile x in-window event: the exact box-vs-ring test, or the
-        bbox test for a null footprint."""
-        bx = [boxes[c].to_numpy() for c in ("minx", "miny", "maxx", "maxy")]
-        out = set()
-        for e in rows:
-            if not (e["start"] >= start and e["end"] <= end):
-                continue
-            if e["geometry_wkb"] is None:
-                hit = (
-                    (bx[0] <= e["maxx"]) & (bx[2] >= e["minx"])
-                    & (bx[1] <= e["maxy"]) & (bx[3] >= e["miny"])
-                )
-            else:
-                hit = geom.boxes_intersect_polygon(
-                    *bx, geom.wkb_to_polygon(e["geometry_wkb"])
-                )
-            out |= {(t, e["event_id"]) for t in boxes["tile_id"][hit]}
-        return out
-
-    def test_matches_bruteforce_reference(self, spark):
-        from __spark_entry__ import _boxes_pdf
-
-        polys, ev = self._inputs(spark)
-        got = {
-            (r["tile_id"], r["event_id"])
-            for r in joins.interval_spatial_join(
-                polys, ev, "2020-01-01", "2020-12-31"
-            ).collect()
-        }
-        expect = self._reference(
-            _boxes_pdf(), self._rows(), "2020-01-01", "2020-12-31"
-        )
-        assert got == expect and len(got) > 25
-        # the null-footprint event matched via its bbox
-        assert any(eid == 100 for _, eid in got)
-        # out-of-window triangles (start 2019) excluded
-        from geetiles_spark.functions.oracle_sql import event_triangles
-
-        out_ids = {e["event_id"] for e in event_triangles() if e["start"] < "2020"}
-        assert not any(eid in out_ids for _, eid in got)
-
-    def test_never_collects_events(self, spark, monkeypatch):
-        import pyspark.sql.classic.dataframe as cdf
-
-        polys, ev = self._inputs(spark)
-
-        def boom(self, *a, **k):  # noqa: ANN001
-            raise AssertionError("driver collect during plan construction")
-
-        monkeypatch.setattr(cdf.DataFrame, "collect", boom)
-        df = joins.interval_spatial_join(
-            polys, ev, "2020-01-01", "2020-12-31", level=6,
-        )
-        df._jdf.queryExecution().executedPlan()
 
 
 def _grid_tiles() -> pd.DataFrame:

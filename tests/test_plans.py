@@ -61,13 +61,13 @@ class TestPlanShapes:
         operator counts are pinned so the shared join keeps their plans:
         the cell cover is a codegen generator, so their Python nodes are
         the area refine and the contract fixture's tile generator (a cached
-        relation, printed under each of its scans).  J1 is one pass: its only exchanges are the foreign
-        cells' broadcast and the query's final sort, and none hash-
-        partitions (no argmax shuffle, no back-join); J2 still aggregates
-        and joins back."""
+        relation, printed under each of its scans).  J1 and J2 are one
+        pass: their only exchanges are the foreign cells' broadcast and the
+        query's final sort, and none hash-partitions (no argmax shuffle, no
+        props aggregate, no back-join)."""
         import re
 
-        pinned = {"geo_intersect_join": (2, 2), "geo_foreign_props": (3, 5)}
+        pinned = {"geo_intersect_join": (2, 2), "geo_foreign_props": (2, 2)}
         for name in (
             "geo_intersect_join",
             "geo_foreign_props",
@@ -84,7 +84,8 @@ class TestPlanShapes:
                     plan.count("Exchange"),
                 )
                 assert got == pinned[name], (name, got)
-        assert "hashpartitioning" not in _plan(spark, "geo_intersect_join")
+        for name in ("geo_intersect_join", "geo_foreign_props"):
+            assert "hashpartitioning" not in _plan(spark, name), name
 
     def test_cell_joins_explode_in_the_jvm(self, spark):
         """No cell join sends its cover to Python: the only MapInPandas

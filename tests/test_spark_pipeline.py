@@ -146,11 +146,11 @@ class TestJoins:
         fl = _foreign_list(foreign_box)
         got = {
             r["tile_id"]: r["foreign_id"]
-            for r in joins.intersect_join_broadcast(tiles_box, foreign_box).collect()
+            for r in joins.intersect_join_cells(tiles_box, foreign_box).collect()
         }
         for r in tiles_box.select("tile_id", "geometry_wkb").collect():
             exp = oracle.oracle_intersect(geom.wkb_to_polygon(bytes(r["geometry_wkb"])), fl)
-            assert got[r["tile_id"]] == str(exp) if exp != -1 else "-1"
+            assert got[r["tile_id"]] == (str(exp) if exp != -1 else "-1")
 
     def test_strategies_agree_j1(self, tiles_box, foreign_box):
         a = sorted(
@@ -167,7 +167,7 @@ class TestJoins:
         fl = _foreign_list(foreign_box)
         got = {
             r["tile_id"]: (r["foreign_id"], dict(r["props_at_foreign"]))
-            for r in joins.foreign_proportions_broadcast(tiles_box, foreign_box).collect()
+            for r in joins.foreign_proportions_cells(tiles_box, foreign_box).collect()
         }
         for r in tiles_box.select("tile_id", "geometry_wkb").collect():
             exp_props, exp_id = oracle.oracle_foreign_props(
@@ -182,22 +182,6 @@ class TestJoins:
                 # masked clip (Spark) and the scalar clip (oracle) — both
                 # correct; GEOS would differ from either the same way
                 assert gprops[k] == pytest.approx(exp_props[k], abs=1e-9)
-
-    def test_strategies_agree_j2(self, tiles_box, foreign_box):
-        a = {
-            r["tile_id"]: (r["foreign_id"], dict(r["props_at_foreign"]))
-            for r in joins.foreign_proportions_broadcast(tiles_box, foreign_box).collect()
-        }
-        b = {
-            r["tile_id"]: (r["foreign_id"], dict(r["props_at_foreign"]))
-            for r in joins.foreign_proportions_cells(tiles_box, foreign_box).collect()
-        }
-        assert set(a) == set(b)
-        for k in a:
-            assert a[k][0] == b[k][0]
-            assert set(a[k][1]) == set(b[k][1])
-            for c in a[k][1]:
-                assert a[k][1][c] == pytest.approx(b[k][1][c], abs=1e-12)
 
     def test_no_intersection_sentinel(self, spark, tiles_box, foreign_box):
         # a far-away foreign set -> every tile gets '-1' and empty props
@@ -228,7 +212,7 @@ class TestJoins:
         far2 = spark.createDataFrame(
             pd.DataFrame(shifted)[far.schema.names], schema=far.schema
         )
-        out = joins.intersect_join_broadcast(tiles_box, far2).collect()
+        out = joins.intersect_join_cells(tiles_box, far2).collect()
         assert all(r["foreign_id"] == "-1" for r in out)
         out2 = joins.foreign_proportions_cells(tiles_box, far2).collect()
         assert all(r["foreign_id"] == "-1" and len(r["props_at_foreign"]) == 0 for r in out2)
@@ -335,7 +319,7 @@ class TestSplit:
 
     def test_mode_per_foreign(self, tiles_box, foreign_box):
         with_split = splitop.split(tiles_box, 8, 0.3, 0.5, 0.3, 0.2)
-        j1 = joins.intersect_join_broadcast(tiles_box, foreign_box)
+        j1 = joins.intersect_join_cells(tiles_box, foreign_box)
         joined = with_split.join(j1, "tile_id")
         got = (
             splitop.split_per_partitions(joined, "foreign_id")
