@@ -85,7 +85,14 @@ pos AS (SELECT * FROM pairs WHERE ia > 0)"""
 
 def intersect_oracle_sql(chip_size_m: float) -> str:
     """J1: per tile the foreign id of the max intersection area (first max in
-    foreign row order), '-1' when nothing overlaps."""
+    foreign row order), '-1' when nothing overlaps.
+
+    Diverges from the engine J1 on a touch-only tile: ``pos`` keeps only
+    pairs of positive area, so such a tile gets '-1' here, where
+    ``joins.intersect_join_cells`` gives the first toucher in foreign row
+    order (the reference's ``intersects``).  The contract fixture holds no
+    touch-only tile, so the two agree on it; :func:`split_per_partitions_oracle_sql`
+    inherits the same rule."""
     body, last = _grid_with(chip_size_m)
     return f"""
 WITH {body},
@@ -217,7 +224,8 @@ def split_per_partitions_oracle_sql(
     """A3 (``partitions.py:383-384``): per foreign group, the MODE of the
     tile splits, ties resolved by first occurrence in row order (pandas
     ``value_counts`` parity) — composed from the W1 banding CTEs and the J1
-    argmax foreign assignment."""
+    argmax foreign assignment (with :func:`intersect_oracle_sql`'s '-1' for
+    a touch-only tile, where the engine gives the first toucher)."""
     body, last = _grid_with(chip_size_m)
     return f"""
 WITH {body},

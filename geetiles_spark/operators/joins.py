@@ -62,11 +62,12 @@ _BOUNDS = ["minx", "miny", "maxx", "maxy"]
 MAX_BROADCAST_POLYS = 100_000
 
 
-def _touches(ring, x0, y0, x1, y1) -> bool:
-    """The reference's ``intersects`` of a foreign ring and a tile box
-    whose intersection has zero area: touching counts.  The one touch rule
-    of the cell refine and the reference J1's :func:`_touch_fallback`."""
-    return geom.convex_intersects(geom.box_ring(x0, y0, x1, y1), ring)
+def _touches(ring, x0, y0, x1, y1) -> np.ndarray:
+    """The reference's ``intersects`` of one foreign ring and N tile boxes
+    (arrays of bounds), touching counted, exact for a concave ring too: a
+    box in the notch of an L-shaped ring does not touch it.  The one touch
+    rule of the cell refine and the reference J1's :func:`_touch_fallback`."""
+    return geom.boxes_intersect_polygon(x0, y0, x1, y1, ring)
 
 
 # --------------------------------------------------------------------------
@@ -121,7 +122,7 @@ def _touch_fallback(fset, x0, y0, x1, y1) -> str | None:
         fx0, fy0, fx1, fy1 = f["bounds"]
         if fx1 < x0 or fx0 > x1 or fy1 < y0 or fy0 > y1:
             continue
-        if _touches(f["ring"], x0, y0, x1, y1):
+        if _touches(f["ring"], [x0], [y0], [x1], [y1])[0]:
             return f["id"]
     return None
 
@@ -337,19 +338,23 @@ def _tile_boxes(pdf: pd.DataFrame) -> list[np.ndarray]:
 def _pair_areas(pdf: pd.DataFrame, groups: list) -> tuple[np.ndarray, np.ndarray]:
     """Exact intersection area of each row's tile box with its foreign
     ring, and whether the two meet: a positive area, or a zero area that
-    :func:`_touches`.  A row with no foreign, or a null ring, has area 0
-    and meets nothing."""
+    :func:`_touches`.  The touch test runs only on the rows of tiles with
+    no positive area in this batch, one vectorized call per ring (a tile
+    split across batches may test rows its other part outranks; the
+    result is unused there).  A row with no foreign, or a null ring, has
+    area 0 and meets nothing."""
     boxes = _tile_boxes(pdf)
     areas = np.zeros(len(pdf), dtype=np.float64)
-    meets = np.zeros(len(pdf), dtype=bool)
-    for idx, ring in groups:
-        if ring is None:
-            continue
-        a = geom.clip_areas_ring_boxes_exact(ring, *(b[idx] for b in boxes))
-        areas[idx] = a
-        meets[idx] = a > 0
-        for i in idx[a == 0]:
-            meets[i] = _touches(ring, *(b[i] for b in boxes))
+    live = [(idx, ring) for idx, ring in groups if ring is not None]
+    for idx, ring in live:
+        areas[idx] = geom.clip_areas_ring_boxes_exact(ring, *(b[idx] for b in boxes))
+    meets = areas > 0
+    row = pdf["tile_row"].to_numpy()
+    bare = ~np.isin(row, row[meets])
+    for idx, ring in live:
+        t = idx[bare[idx]]
+        if len(t):
+            meets[t] = _touches(ring, *(b[t] for b in boxes))
     return areas, meets
 
 

@@ -105,7 +105,10 @@ def oracle_proportions(arr: np.ndarray, ddef, ring: np.ndarray) -> dict[str, flo
 
 
 def _relevant(tile_ring: np.ndarray, foreign: list[dict]) -> list[dict]:
-    return [f for f in foreign if geom.convex_intersects(f["ring"], tile_ring)]
+    """The foreigns a box tile ``intersects`` (touching counts), exact for
+    concave foreign rings."""
+    box = [np.r_[v] for v in geom.ring_bounds(tile_ring)]
+    return [f for f in foreign if geom.boxes_intersect_polygon(*box, f["ring"])[0]]
 
 
 def oracle_intersect(tile_ring: np.ndarray, foreign: list[dict]):

@@ -304,6 +304,7 @@ def _j1_tiles() -> pd.DataFrame:
         ("dup", 5.0, 0.0, 6.0, 1.0),  # a duplicate row keeps its own row
         ("tnull", None, 0.0, 1.0, 1.0),
         ("tnan", 0.0, nan, 1.0, 1.0),
+        ("notch", 22.0, 2.0, 23.0, 3.0),  # in fl's notch: meets nothing
     ]
     return pd.DataFrame(rows, columns=["tile_id", *_BOUNDS])
 
@@ -321,9 +322,13 @@ def _j1_foreign() -> pd.DataFrame:
         (10, "fb3", None, 3.0, 8.0, 9.5, 9.5),  # a null props map
         (11, "fa", {"t": 1.0}, 10.0, 11.0, 10.5, 11.5),  # a later toucher
     ]
+    # a concave L ring whose bbox holds the "notch" tile it does not touch
+    ell = np.array([(20, 0), (24, 0), (24, 1), (21, 1), (21, 4), (20, 4)], dtype=np.float64)
     return pd.DataFrame(
         [{"row_idx": i, "tile_id": f, "geometry_wkb": _box_wkb(*b),
           **dict(zip(_BOUNDS, b)), "props": p} for i, f, p, *b in boxes]
+        + [{"row_idx": 12, "tile_id": "fl", "geometry_wkb": bytes(geom.polygon_to_wkb(ell)),
+            **dict(zip(_BOUNDS, geom.ring_bounds(ell))), "props": {"l": 1.0}}]
     )
 
 
@@ -347,9 +352,9 @@ def _j1_oracle(tiles: pd.DataFrame, foreign: pd.DataFrame) -> list:
                     hits.append((a, f.props or {}))
                     if best is None or (a, -f.row_idx, f.tile_id) > best:
                         best = (a, -f.row_idx, f.tile_id)
-                elif not hits and best is None and geom.convex_intersects(
-                    geom.box_ring(*(b[0] for b in box)), ring
-                ):
+                elif not hits and best is None and geom.boxes_intersect_polygon(
+                    *box, ring
+                )[0]:
                     best = (0.0, -f.row_idx, f.tile_id)
         total = sum(a for a, _ in hits)
         props = {}
@@ -398,8 +403,8 @@ def test_intersect_join_cells_one_pass(spark, level, batch_rows):
     want = _j1_oracle(tiles_pdf, foreign_pdf)
     wid = {t: f for t, f, _ in want}
     assert wid["tie"] == "f3" and wid["big"] == "fb2" and wid["dup"] == "fd"
-    assert {t: wid[t] for t in ("none", "touch", "tnull", "tnan")} == {
-        "none": "-1", "touch": "ft", "tnull": "-1", "tnan": "-1"}
+    assert {t: wid[t] for t in ("none", "touch", "tnull", "tnan", "notch")} == {
+        "none": "-1", "touch": "ft", "tnull": "-1", "tnan": "-1", "notch": "-1"}
     wprops = {t: p for t, _, p in want}
     assert wprops["touch"] == {} and wprops["dup"] == {"e": 1.0}
     assert sorted(wprops["big"]) == ["a", "b"]
@@ -420,7 +425,7 @@ def test_reference_j1_matches_oracle(spark):
     """The reference J1 takes the same touch rule as the cell pass."""
     tiles_pdf = _j1_tiles().dropna()
     want = [w[:2] for w in _j1_oracle(tiles_pdf, _j1_foreign())]
-    assert ("touch", "ft") in want
+    assert ("touch", "ft") in want and ("notch", "-1") in want
     tiles = spark.createDataFrame(tiles_pdf, _J1_TILE_SCHEMA)
     foreign = spark.createDataFrame(_j1_foreign(), _J1_FOREIGN_SCHEMA)
     got = joins.intersect_join_broadcast(tiles, foreign).collect()
