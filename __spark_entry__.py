@@ -67,7 +67,7 @@ def _fixture_foreign(spark: SparkSession) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full geo pipeline + sf0.001 document assignment per tile."""
     sf_dir = "/root/testdata/sf0.001"
-    tiles = _fixture_tiles(spark).cache()
+    tiles = _fixture_tiles(spark)
     ch = chipsrc.generate_chips(tiles, LABELS)
     props = zonal.compute_proportions(tiles, ch, LABELS)
     foreign = _fixture_foreign(spark)

@@ -111,7 +111,12 @@ ORDER BY tile_id
 
 def foreign_props_oracle_sql(chip_size_m: float) -> str:
     """J2: per (tile, class) the area-weighted mean of foreign proportions
-    over the overlapping foreign set."""
+    over the overlapping foreign set.
+
+    Diverges from the engine J2 on a zero-area toucher: ``pos`` drops it,
+    where ``joins.foreign_proportions_cells`` keeps its keys at 0.0 (the
+    reference's ``intersects`` set).  The contract fixture holds no
+    touching tile, so the two agree on it."""
     body, last = _grid_with(chip_size_m)
     prop_rows = ", ".join(
         f"({f['row_idx']}, '{cls}', {_L(frac)})"

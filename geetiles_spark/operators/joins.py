@@ -12,7 +12,9 @@ loop — the reference's scalability cliff), then
 * J2 (``geet lp.from_foreign``): weights ``w_i = area_i / Σ area`` over the
   intersecting set, output ``Σ w_i · props_i`` per class key (missing keys
   contribute 0 — pandas NaN-skip semantics at ``partitions.py:500``), plus
-  the argmax foreign id as in J1.
+  the argmax foreign id as in J1.  A foreign that only touches the tile
+  is in the set with weight 0, so its keys appear with value 0.0; with
+  ``Σ area = 0`` every weight is 0.
 
 J1 and J2 have one strategy, the **cell join** — the engine's one
 tile-vs-footprint join (J1/J2 and the J5 flood join): tiles explode to
@@ -335,14 +337,17 @@ def _tile_boxes(pdf: pd.DataFrame) -> list[np.ndarray]:
     return [pdf["t_" + c].to_numpy() for c in _BOUNDS]
 
 
-def _pair_areas(pdf: pd.DataFrame, groups: list) -> tuple[np.ndarray, np.ndarray]:
+def _pair_areas(
+    pdf: pd.DataFrame, groups: list, every_touch: bool
+) -> tuple[np.ndarray, np.ndarray]:
     """Exact intersection area of each row's tile box with its foreign
     ring, and whether the two meet: a positive area, or a zero area that
-    :func:`_touches`.  The touch test runs only on the rows of tiles with
-    no positive area in this batch, one vectorized call per ring (a tile
-    split across batches may test rows its other part outranks; the
-    result is unused there).  A row with no foreign, or a null ring, has
-    area 0 and meets nothing."""
+    :func:`_touches`.  The touch test runs one vectorized call per ring,
+    on every zero-area row with ``every_touch`` (J2's props count each
+    toucher), else only on the rows of tiles with no positive area in
+    this batch (J1: a tile split across batches may test rows its other
+    part outranks; the result is unused there).  A row with no foreign, or
+    a null ring, has area 0 and meets nothing."""
     boxes = _tile_boxes(pdf)
     areas = np.zeros(len(pdf), dtype=np.float64)
     live = [(idx, ring) for idx, ring in groups if ring is not None]
@@ -350,9 +355,9 @@ def _pair_areas(pdf: pd.DataFrame, groups: list) -> tuple[np.ndarray, np.ndarray
         areas[idx] = geom.clip_areas_ring_boxes_exact(ring, *(b[idx] for b in boxes))
     meets = areas > 0
     row = pdf["tile_row"].to_numpy()
-    bare = ~np.isin(row, row[meets])
+    test = ~meets if every_touch else ~np.isin(row, row[meets])
     for idx, ring in live:
-        t = idx[bare[idx]]
+        t = idx[test[idx]]
         if len(t):
             meets[t] = _touches(ring, *(b[t] for b in boxes))
     return areas, meets
@@ -391,7 +396,7 @@ def _tile_pass(
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         held = None  # the last tile's rows: the next batch may continue it
         for pdf, groups in _ring_groups(batches, "foreign_id", "foreign_wkb"):
-            area, meets = _pair_areas(pdf, groups)
+            area, meets = _pair_areas(pdf, groups, every_touch=props)
             pdf = pdf.assign(area=area, meets=meets)
             if held is not None:
                 pdf = pd.concat([held, pdf], ignore_index=True)
@@ -416,9 +421,10 @@ def _tile_results(pdf: pd.DataFrame, props: bool) -> pd.DataFrame:
     The foreign id is that of the met row with the max ``area``, then the
     min ``foreign_idx``, then the max ``foreign_id``, else '-1': a tile met
     only by touch gets its first toucher.  The props are
-    ``Σ w_i · props_i[k]`` over the rows of positive area,
-    ``w_i = area_i / Σ area``, a missing key counting 0, keys sorted;
-    ``{}`` when no area is positive."""
+    ``Σ w_i · props_i[k]`` over the met rows, ``w_i = area_i / Σ area``
+    (0 when ``Σ area = 0``), a missing key counting 0, keys sorted: a
+    toucher's keys appear with 0.0, and a tile met by nothing gets
+    ``{}``."""
     met = pdf[pdf["meets"]].sort_values(
         ["tile_row", "area", "foreign_idx", "foreign_id"],
         ascending=[True, False, True, False],
@@ -433,10 +439,11 @@ def _tile_results(pdf: pd.DataFrame, props: bool) -> pd.DataFrame:
     )
     if props:
         # summed in foreign row order; a null props map counts as {}
-        pos = pdf[pdf["area"] > 0].sort_values(["tile_row", "foreign_idx"])
-        w = pos["area"] / pos.groupby("tile_row")["area"].transform("sum")
+        met = met.sort_values(["tile_row", "foreign_idx"])
+        total = met.groupby("tile_row")["area"].transform("sum").to_numpy()
+        w = np.divide(met["area"].to_numpy(), total, out=np.zeros(len(met)), where=total > 0)
         mix: dict = {}
-        for row, wi, p in zip(pos["tile_row"], w, pos["foreign_props"]):
+        for row, wi, p in zip(met["tile_row"], w, met["foreign_props"]):
             acc = mix.setdefault(row, {})
             for k, v in (p or {}).items():
                 acc[k] = acc.get(k, 0.0) + wi * v
@@ -465,8 +472,8 @@ def foreign_proportions_cells(
     (tile_id, foreign_id, props_at_foreign) per tile row.  ``foreign``
     carries ``props`` (``map<string,double>``), which ride the broadcast
     side of the join; ``props_at_foreign`` is the area-weighted mean of
-    the overlapping foreigns' props (:func:`_tile_results`), and
-    ``foreign_id`` is J1's."""
+    the props of the foreigns the tile meets, touchers weighing 0
+    (:func:`_tile_results`), and ``foreign_id`` is J1's."""
     return _tile_pass(tiles, foreign, level, props=True)
 
 

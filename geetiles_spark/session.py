@@ -4,6 +4,17 @@ Local mode here; on a real cluster the same builder args ship via
 ``spark-submit --py-files geetiles_spark.zip`` (north rule).  AQE is on so
 skewed cell joins re-plan at runtime; Arrow is on because every geospatial
 kernel runs in Arrow-batched pandas UDFs.
+
+Python workers run from zip archives (``pyspark.zip``, Spark's jars, a
+``--py-files`` zip), and PySpark calls ``importlib.invalidate_caches()``
+at the start of every task (``pyspark/worker_util.py:144``,
+``setup_spark_files``).  On CPython 3.11 each zip importer answers by
+re-parsing its archive's whole central directory
+(``zipimport.py:329-336``, ``zipimporter.invalidate_caches``): 0.1-0.3 s
+per task before its first row, for the ~14 importers of a reused worker.
+Importing :mod:`geetiles_spark` installs :mod:`geetiles_spark._zipimport`,
+which re-reads an archive only when its mtime or size changed; engine
+closures import the package, so every worker that runs one is guarded.
 """
 
 from __future__ import annotations

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from geetiles_spark.geo import cells, geom
 from geetiles_spark.operators import joins
 
+from . import oracle
+
 _BOUNDS = joins._BOUNDS
 
 
@@ -305,6 +307,8 @@ def _j1_tiles() -> pd.DataFrame:
         ("tnull", None, 0.0, 1.0, 1.0),
         ("tnan", 0.0, nan, 1.0, 1.0),
         ("notch", 22.0, 2.0, 23.0, 3.0),  # in fl's notch: meets nothing
+        ("ab", 30.0, 0.0, 31.0, 1.0),  # overlapped by fA, edge-touched by fB
+        ("bonly", 32.0, 0.0, 33.0, 1.0),  # edge-touched by fB alone
     ]
     return pd.DataFrame(rows, columns=["tile_id", *_BOUNDS])
 
@@ -312,7 +316,7 @@ def _j1_tiles() -> pd.DataFrame:
 def _j1_foreign() -> pd.DataFrame:
     boxes = [
         (0, "fx", {"a": 1.0}, 4.5, 4.5, 5.5, 5.5),
-        (1, "fe", {"z": 1.0}, 6.0, 0.0, 6.5, 1.0),  # a toucher's keys stay out
+        (1, "fe", {"z": 1.0}, 6.0, 0.0, 6.5, 1.0),  # a toucher's keys weigh 0
         (3, "f3", {"c": 1.0}, -1.0, 0.0, 1.0, 2.0),
         (5, "fz", {"c": 0.25, "d": 0.75}, 1.0, 0.0, 3.0, 2.0),
         (6, "ft", {"t": 1.0}, 11.0, 10.0, 12.0, 11.0),
@@ -321,6 +325,8 @@ def _j1_foreign() -> pd.DataFrame:
         (9, "fb2", {"b": 1.0}, 6.0, 4.0, 8.5, 8.5),
         (10, "fb3", None, 3.0, 8.0, 9.5, 9.5),  # a null props map
         (11, "fa", {"t": 1.0}, 10.0, 11.0, 10.5, 11.5),  # a later toucher
+        (13, "fA", {"a": 1.0}, 30.0, 0.0, 30.5, 1.0),
+        (14, "fB", {"b": 1.0}, 31.0, 0.0, 32.0, 1.0),
     ]
     # a concave L ring whose bbox holds the "notch" tile it does not touch
     ell = np.array([(20, 0), (24, 0), (24, 1), (21, 1), (21, 4), (20, 4)], dtype=np.float64)
@@ -333,11 +339,13 @@ def _j1_foreign() -> pd.DataFrame:
 
 
 def _j1_oracle(tiles: pd.DataFrame, foreign: pd.DataFrame) -> list:
-    """Per tile row: (tile_id, foreign_id, props).  The foreign id is that
-    of the max positive exact area, then the lowest foreign row_idx, then
-    the largest id; with no positive area, the lowest-row_idx foreign whose
-    ring touches the box; else '-1'.  The props are the area-weighted sum
-    over the positive-area foreigns, a missing key counting 0."""
+    """Per tile row: (tile_id, foreign_id, props) over the foreigns the box
+    meets (a positive exact area, or a touch).  The foreign id is that of
+    the max area, then the lowest foreign row_idx, then the largest id
+    (with no positive area: the lowest-row_idx toucher); else '-1'.  The
+    props are the area-weighted sum over the met foreigns, a missing key
+    counting 0, a toucher weighing 0 (every weight 0 when no area is
+    positive)."""
     out = []
     for t in tiles.itertuples():
         box = [np.array([getattr(t, c)], dtype=np.float64) for c in _BOUNDS]
@@ -348,19 +356,14 @@ def _j1_oracle(tiles: pd.DataFrame, foreign: pd.DataFrame) -> list:
                     continue
                 ring = geom.wkb_to_polygon(f.geometry_wkb)
                 a = geom.clip_areas_ring_boxes_exact(ring, *box)[0]
-                if a > 0:
+                if a > 0 or geom.boxes_intersect_polygon(*box, ring)[0]:
                     hits.append((a, f.props or {}))
-                    if best is None or (a, -f.row_idx, f.tile_id) > best:
-                        best = (a, -f.row_idx, f.tile_id)
-                elif not hits and best is None and geom.boxes_intersect_polygon(
-                    *box, ring
-                )[0]:
-                    best = (0.0, -f.row_idx, f.tile_id)
+                    best = max(best or (a, -f.row_idx, f.tile_id), (a, -f.row_idx, f.tile_id))
         total = sum(a for a, _ in hits)
         props = {}
         for a, p in hits:
             for k, v in p.items():
-                props[k] = props.get(k, 0.0) + a / total * v
+                props[k] = props.get(k, 0.0) + (a / total if total > 0 else 0.0) * v
         out.append((t.tile_id, best[2] if best else "-1", props))
     return sorted(out, key=lambda r: (r[0], r[1]))
 
@@ -406,8 +409,18 @@ def test_intersect_join_cells_one_pass(spark, level, batch_rows):
     assert {t: wid[t] for t in ("none", "touch", "tnull", "tnan", "notch")} == {
         "none": "-1", "touch": "ft", "tnull": "-1", "tnan": "-1", "notch": "-1"}
     wprops = {t: p for t, _, p in want}
-    assert wprops["touch"] == {} and wprops["dup"] == {"e": 1.0}
+    assert wprops["touch"] == {"t": 0.0} and wprops["dup"] == {"e": 1.0, "z": 0.0}
     assert sorted(wprops["big"]) == ["a", "b"]
+    # zero-area touchers as the literal reference J2 keeps them
+    assert (wid["ab"], wprops["ab"]) == ("fA", {"a": 1.0, "b": 0.0})
+    assert (wid["bonly"], wprops["bonly"]) == ("fB", {"b": 0.0})
+    ref = [{"id": f.tile_id, "ring": geom.wkb_to_polygon(f.geometry_wkb), "props": f.props}
+           for f in _j1_foreign().itertuples()]
+    for t in tiles_pdf[tiles_pdf["tile_id"].isin(["ab", "bonly", "touch", "dup"])].itertuples():
+        with np.errstate(invalid="ignore"):  # the reference's 0/0 weights
+            props, fid = oracle.oracle_foreign_props(
+                geom.box_ring(t.minx, t.miny, t.maxx, t.maxy), ref)
+        assert (fid, props) == (wid[t.tile_id], wprops[t.tile_id]), t.tile_id
     tiles = spark.createDataFrame(tiles_pdf, _J1_TILE_SCHEMA).repartition(2)
     foreign = spark.createDataFrame(foreign_pdf, _J1_FOREIGN_SCHEMA)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"

@@ -756,7 +756,9 @@ class TestIVF:
 class TestPyFilesPackaging:
     def test_zip_is_importable(self, tmp_path):
         """spark-submit --py-files artifact: the zip must be importable from
-        sys.path in a clean interpreter (executor shape)."""
+        sys.path in a clean interpreter (executor shape), and the engine
+        zip-imported so installs the zip-archive guard: a second
+        ``invalidate_caches`` reads no directory."""
         import subprocess
         import sys
 
@@ -764,10 +766,18 @@ class TestPyFilesPackaging:
 
         out = build(str(tmp_path / "geetiles_spark.zip"))
         code = (
-            "import sys; sys.path.insert(0, %r); "
-            "import geetiles_spark.geo.geom as g; "
-            "import geetiles_spark.operators.similarity; "
-            "print(len(g.box_ring(0,0,1,1)))" % out
+            "import sys; sys.path.insert(0, %r)\n"
+            "import importlib, zipimport\n"
+            "import geetiles_spark.geo.geom as g\n"
+            "import geetiles_spark.operators.similarity\n"
+            "assert geetiles_spark.__file__.startswith(%r), geetiles_spark.__file__\n"
+            "assert zipimport.zipimporter.invalidate_caches._geetiles_guard\n"
+            "importlib.invalidate_caches()\n"
+            "stock, seen = zipimport._read_directory, []\n"
+            "zipimport._read_directory = lambda a: seen.append(a) or stock(a)\n"
+            "importlib.invalidate_caches()\n"
+            "assert seen == [], seen\n"
+            "print(len(g.box_ring(0,0,1,1)))" % (out, out)
         )
         r = subprocess.run(
             [sys.executable, "-c", code], capture_output=True, text=True,

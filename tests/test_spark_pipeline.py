@@ -462,3 +462,49 @@ class TestResume:
         assert cat.read(spark, "t").count() == 9
         assert cat.read(spark, "t", s1).count() == 5
         assert cat.current_snapshot("t") == s2
+
+
+# ---------------------------------------------------------------- worker ---
+
+
+class TestWorker:
+    def test_unchanged_archives_are_not_reread_per_task(self, spark):
+        """PySpark's worker runs ``importlib.invalidate_caches()`` at the
+        start of every task; with the engine imported, a Python task reads
+        no unchanged zip directory there (``geetiles_spark/_zipimport.py``)."""
+
+        def count_reads(batches):
+            import importlib
+            import sys
+            import zipimport
+
+            import geetiles_spark  # noqa: F401  (installs the guard)
+
+            # stamps the importers this worker made before the import
+            importlib.invalidate_caches()
+            stock, seen = zipimport._read_directory, []
+            zipimport._read_directory = lambda a: seen.append(a) or stock(a)
+            try:
+                importlib.invalidate_caches()
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = stock
+            zips = sum(
+                isinstance(v, zipimport.zipimporter)
+                for v in list(sys.path_importer_cache.values())
+            )
+            guard = getattr(zipimport.zipimporter.invalidate_caches, "_geetiles_guard", False)
+            for b in batches:
+                yield pd.DataFrame(
+                    {"id": b["id"], "reads": len(seen), "zips": zips, "guard": guard}
+                )
+
+        got = (
+            spark.range(8, numPartitions=8)
+            .mapInPandas(count_reads, "id long, reads int, zips int, guard boolean")
+            .collect()
+        )
+        assert sorted(r["id"] for r in got) == list(range(8))
+        assert all(r["guard"] for r in got)
+        assert all(r["zips"] > 0 for r in got)  # the worker runs from zips
+        assert [r["reads"] for r in got] == [0] * 8
